@@ -20,17 +20,17 @@ Two forms:
   composes the mapping with itself, doubling the propagation radius per
   round, so O(log diameter) rounds).  The symmetric edge set is
   checkpointed ONCE, hash-partitioned + sorted by ``src`` with the
-  partitioning preserved into the checkpoint scan (r18,
-  :func:`partitioned_edge_checkpoint`), so per round only the |V|-row
+  partitioning preserved into the checkpoint scan
+  (:func:`partitioned_edge_checkpoint`), so per round only the |V|-row
   labeling ever shuffles — broadcast when its exact count fits the
   session threshold (then the round plan carries ZERO shuffle
-  exchanges and runs THREE propagation hops, cutting the round count
-  ~3x), sort-merge against the pre-clustered edge side otherwise.
-  ``localCheckpoint`` per round cuts lineage; ONE aggregate action per
-  round materializes the checkpoint and doubles as the convergence
-  certificate.  This is the same alternating-contraction idea as the
-  large-star/small-star CC algorithm; use it when the dup-pair edge
-  list itself outgrows one task (billions of edges).
+  exchanges and runs THREE propagation hops), sort-merge against the
+  pre-clustered edge side otherwise.  The rounds run on
+  :func:`superstep_loop`, the one driver of every fixpoint loop here and
+  in ``queries/graph_queries.py``.  This is the same
+  alternating-contraction idea as the large-star/small-star CC
+  algorithm; use it when the dup-pair edge list itself outgrows one
+  task (billions of edges).
 * :func:`cc_auto` — the ACTION-path dispatcher: materializes the pair
   list once, counts it, and picks the single-task form below
   :data:`CC_SINGLE_TASK_MAX_EDGES` edges and the distributed form above.
@@ -43,33 +43,21 @@ from __future__ import annotations
 import logging
 import math
 import os
-from collections.abc import Iterator
+import time
+import uuid
+from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
+from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from seisdb_spark.plancheck import final_plan
+from seisdb_spark.plancheck import count_exchanges, final_plan
 
 _LOG = logging.getLogger(__name__)
 _RELEASE_FAILED_ONCE = False
-
-#: Executed per-round plans of the LAST :func:`connected_components` run
-#: (one entry per propagation round), captured for the scale harness: the
-#: returned labeling's plan only shows a projection over the last
-#: checkpointed iterate — the neighbour-min + pointer-jump joins execute
-#: behind localCheckpoint boundaries during the loop, so a predicate that
-#: reads only the final plan would certify nothing about the supersteps
-#: that dominate the cost (the KCORE_ROUND_PLANS discipline).
-CC_ROUND_PLANS: list[str] = []
-
-#: Monotone suffix for the per-round temp-view names (:func:`_cc_round`):
-#: unique per call so concurrent loops in one session (driver-thread
-#: overlap, guide §2.6) can never read each other's bindings.
-_CC_VIEW_SEQ = 0
-
 
 def release_checkpoint(df: DataFrame) -> None:
     """Unpersist the checkpointed RDD behind a localCheckpoint DataFrame.
@@ -129,9 +117,10 @@ LOOP_STATE_ROW_BYTES = 32
 
 def _auto_broadcast_bytes(spark) -> int:
     """The session's own ``spark.sql.autoBroadcastJoinThreshold`` in bytes
-    (0 when disabled/unparseable) — the gated-broadcast helpers below size
-    against the SAME knob the planner uses, so one production setting
-    governs both the optimizer's estimates and our exact-count hints."""
+    (0 when disabled/unparseable) — :func:`superstep_loop`'s regime gate
+    sizes against the SAME knob the planner uses, so one production
+    setting governs both the optimizer's estimates and the loops'
+    exact-count hints."""
     raw = str(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     ).strip().lower()
@@ -148,34 +137,6 @@ def _auto_broadcast_bytes(spark) -> int:
     except ValueError:
         return 0
     return max(n * mult, 0)
-
-
-def hint_broadcast_if_small(df: DataFrame, n_rows: int | None) -> DataFrame:
-    """Broadcast-hint a driver-loop's per-round small side when its KNOWN
-    row count fits the session's broadcast threshold; otherwise return it
-    unchanged.
-
-    Why the hint is needed at all (guide §3.1): every loop's round state
-    (labeling / cost table / frontier / survivor set) is a localCheckpoint,
-    which scans as a LogicalRDD with UNKNOWN stats — the static planner
-    can never pick the broadcast join itself, and AQE only rewrites
-    SMJ -> BHJ after BOTH sides' exchanges have materialized, so the big
-    (edge) side pays a full shuffle write per round for a join that ends
-    up broadcast anyway (measured r18: ~0.4 s/round of the k-core peel at
-    sf0.1 was exactly this).  The loops, unlike the planner, know the
-    EXACT row count of their round state — the convergence certificate /
-    frontier count they already compute — so the decision here is made
-    from real numbers, sized against ``spark.sql.autoBroadcastJoinThreshold``
-    (the one knob a production deployment already tunes).  Above the
-    threshold — the 100 TB regime, e.g. the x1000 tier's 25.7M-vertex
-    labeling — the input is returned unchanged and the round keeps the
-    shuffle join that AQE skew-handles.  Pure strategy hint: join results
-    are identical either way."""
-    if n_rows is None:
-        return df
-    if n_rows * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(df.sparkSession):
-        return F.broadcast(df)
-    return df
 
 
 #: Target bytes per partition of a loop's persisted edge checkpoint —
@@ -283,6 +244,189 @@ def partitioned_edge_checkpoint(
         )
 
 
+@dataclass(frozen=True)
+class Views:
+    """What one superstep's SQL reads: the temp-view names of the current
+    ``state``, the regime's ``edges`` and, for accumulating loops, the
+    ``history`` (the union of every state so far), and the ``round``
+    number (1-based)."""
+
+    state: str
+    edges: str
+    history: str
+    round: int
+
+
+@dataclass(frozen=True)
+class Round:
+    """One superstep of a :func:`superstep_loop` run: its number, the
+    regime it ran in (``"broadcast"`` or ``"scale"``), the state's row
+    count after it, its wall seconds and the DataFrame it executed.  The
+    executed plan is read only when a caller asks for it (:attr:`plan`)."""
+
+    round: int
+    regime: str
+    rows: int
+    seconds: float
+    df: DataFrame
+
+    @property
+    def plan(self) -> str:
+        return final_plan(self.df)
+
+
+def _checkpoint_round(df: DataFrame, i: int) -> tuple[DataFrame, DataFrame]:
+    """Checkpoint one round's result; returns ``(executed df, checkpoint)``.
+
+    A round that shuffles is checkpointed as planned, under AQE, which
+    keeps skew handling and coalescing where they matter.  An
+    exchange-free round is re-planned with AQE off so the checkpoint
+    keeps its partitioning (see :func:`_aqe_off`), after re-aliasing
+    every column under a per-round metadata tag.  A round's SQL output
+    is qualified by its view alias (``e.src``) while the physical
+    partitioning it carries names the unqualified scan attribute, so when
+    the next round references the checkpoint twice
+    (``LogicalRDD.newInstance`` for the second reference) the
+    partitioning is not rewritten and every re-bound round re-shuffles
+    its state.  The alias gives the checkpoint fresh, unqualified output
+    attributes and the projection maps the partitioning onto them; the
+    tag differs from the input's, so RemoveRedundantAliases keeps it."""
+    if count_exchanges(df._jdf.queryExecution().executedPlan().toString()):
+        return df, df.localCheckpoint(eager=False)
+    df = df.select(
+        *[F.col(c).alias(c, metadata={"superstep": i}) for c in df.columns]
+    )
+    with _aqe_off(df.sparkSession):
+        return df, df.localCheckpoint(eager=False)
+
+
+def superstep_loop(
+    seed: DataFrame,
+    round_sql: Callable[[Views, bool], str],
+    *,
+    max_rounds: int,
+    certificate: Sequence[Column] = (),
+    seed_cert: tuple | None = None,
+    broadcast_rows: int | None = None,
+    edges: DataFrame | None = None,
+    partition_edges: bool = False,
+    accumulate: bool = False,
+    name: str = "superstep loop",
+    raise_at_cap: bool = False,
+) -> tuple[DataFrame, list[Round]]:
+    """Run ``round_sql`` to a fixpoint; returns ``(result, trace)``.
+
+    The one driver of the fixpoint loops (connected components, k-core,
+    BFS, SSSP).  Each algorithm supplies its seed state (a checkpoint the
+    loop owns), its round as ONE SQL statement over the :class:`Views`
+    for a regime, and its certificate; the driver owns the rest:
+
+    * **regime gate**: a round is broadcast-regime when its broadcast
+      side's exact row count times :data:`LOOP_STATE_ROW_BYTES` fits the
+      session's ``autoBroadcastJoinThreshold``.  That side is the state
+      (``broadcast_rows`` overrides it with a fixed bound, and an
+      accumulating loop gates on its history).  Loop state is a
+      checkpoint with unknown statistics, so the planner cannot make
+      this choice itself, and AQE rewrites a sort-merge join to a
+      broadcast only after both sides' exchanges have materialized — the
+      edge side would pay a full shuffle write per round for a join that
+      ends up broadcast anyway.  The loop knows the exact count.
+    * **edges**: the round reads ``edges`` as its edge view.  With
+      ``partition_edges``, scale-regime rounds read a src-partitioned
+      checkpoint of it instead (:func:`partitioned_edge_checkpoint`),
+      built on the first scale round and released when the loop exits.
+    * **one statement per round**: PySpark DataFrame transformations
+      re-analyze the whole accumulated tree eagerly, so a round built op
+      by op pays one analyzer pass per op; one ``spark.sql`` statement
+      over re-bound temp views analyzes it once.  View names are unique
+      per call, so concurrent loops in one session never read each
+      other's bindings; the views are dropped on exit.
+    * **one action per round**: the round is localCheckpointed (cutting
+      the lineage) and ONE aggregate, ``count(*)`` plus ``certificate``,
+      both materializes the checkpoint and yields the round's
+      certificate.
+    * **convergence**: a replacing loop stops when the certificate equals
+      the previous one (``seed_cert``, or the same aggregate over the
+      seed); each algorithm argues why an equal certificate means an
+      unchanged state.  An ``accumulate`` loop's state is a delta (BFS's
+      frontier): it stops when the delta is empty, and the result is the
+      history, the union of the seed and every delta.
+    * **release**: a replacing loop releases each superseded state once
+      its successor has materialized, and its current state when it
+      raises.  Accumulated states are never released: they are the
+      result.  The scale edge copy is released on every exit path.
+    * **round cap**: after ``max_rounds`` rounds the loop raises
+      RuntimeError when ``raise_at_cap`` (an unconverged result would be
+      wrong) and returns quietly otherwise (a bounded ladder).
+
+    The trace has one :class:`Round` per superstep: the final plan of a
+    loop result shows only a scan of its last checkpoint, so the trace is
+    where the supersteps that dominate the cost can be inspected."""
+    spark = seed.sparkSession
+    run = uuid.uuid4().hex[:12]
+    names = [f"seisdb_loop_{run}_{r}" for r in ("s", "e", "h")]
+    limit = _auto_broadcast_bytes(spark)
+    state, history, scale_copy, trace = seed, seed, None, []
+    try:
+        if seed_cert is None:
+            seed_cert = tuple(seed.agg(F.count(F.lit(1)), *certificate).first())
+        cert, total = seed_cert, int(seed_cert[0] or 0)
+        for i in range(1, max_rounds + 1):
+            t0 = time.perf_counter()
+            views = Views(*names, round=i)
+            if broadcast_rows is not None:
+                gate = broadcast_rows
+            else:
+                gate = total if accumulate else int(cert[0] or 0)
+            broadcast = gate * LOOP_STATE_ROW_BYTES <= limit
+            e = edges
+            if not broadcast and partition_edges:
+                if scale_copy is None:
+                    scale_copy = partitioned_edge_checkpoint(
+                        edges, "src", edges.count(), eager=False
+                    )
+                e = scale_copy
+            if e is not None:
+                e.createOrReplaceTempView(views.edges)
+            state.createOrReplaceTempView(views.state)
+            if accumulate:
+                history.createOrReplaceTempView(views.history)
+            df, nxt = _checkpoint_round(spark.sql(round_sql(views, broadcast)), i)
+            new_cert = tuple(nxt.agg(F.count(F.lit(1)), *certificate).first())
+            rows = int(new_cert[0] or 0)
+            trace.append(
+                Round(
+                    i,
+                    "broadcast" if broadcast else "scale",
+                    rows,
+                    time.perf_counter() - t0,
+                    df,
+                )
+            )
+            if accumulate:
+                if rows == 0:
+                    release_checkpoint(nxt)
+                    return history, trace
+                history, total = history.unionByName(nxt), total + rows
+            else:
+                release_checkpoint(state)
+                if new_cert == cert:
+                    return nxt, trace
+            state, cert = nxt, new_cert
+        if raise_at_cap:
+            raise RuntimeError(f"{name} did not converge within {max_rounds} rounds")
+        return (history if accumulate else state), trace
+    except BaseException:
+        if not accumulate:
+            release_checkpoint(state)
+        raise
+    finally:
+        if scale_copy is not None:
+            release_checkpoint(scale_copy)
+        for v in names:
+            spark.catalog.dropTempView(v)
+
+
 _CC_SCHEMA = T.StructType(
     [
         T.StructField("v", T.LongType(), False),
@@ -335,43 +479,50 @@ def cc_exact_lazy(
     return edges.mapInPandas(union_find, _CC_SCHEMA)
 
 
-def _cc_round_sql(e_view: str, m_view: str, broadcast_state: bool, hops: int) -> str:
-    """The FULL propagation round (``hops`` neighbour-min hops + one
-    pointer jump) as ONE SQL statement over two temp views.
+def _cc_round_sql(v: Views, broadcast: bool) -> str:
+    """The FULL propagation round (neighbour-min hops + one pointer jump)
+    as ONE SQL statement over the labeling view ``v.state`` (v, l) and the
+    symmetric edge view ``v.edges``.
 
-    Why SQL and not the former per-hop DataFrame composition (r19, guide
-    §7.3 — planning time itself as the bottleneck): every PySpark
-    DataFrame transformation eagerly runs the analyzer over the whole
-    accumulated tree, so a 3-hop round paid ~17 incremental analyses plus
-    as many py4j round trips — measured 0.55 s of pure driver-side plan
-    construction per WARM round at sf0.1, ~2x the round's entire
-    distributed execution.  One ``spark.sql`` statement parses and
-    analyzes the identical tree ONCE (probe: build 8.1 -> 3.6 s over a
-    5-round loop, same session, results hash-identical and the executed
-    round plan node-for-node the same — zero shuffle exchanges, same
-    BroadcastHashJoin count, ReusedExchange still deduplicating the nb
-    broadcast).  Per-round driver work is what bounds the loop at ANY
-    data scale, so this is a 100 TB optimization, not an sf0.1 trick.
+    Labels are always existing vertex ids (they start as vertex ids and
+    only ever copy), so the pointer-jump join is inner.  The jump
+    references the post-min labeling on BOTH sides (probe + lookup);
+    Catalyst's ReuseExchange deduplicates the identical exchange
+    subtrees, so the neighbour-min executes once per round and the
+    second reference reads the ``ReusedExchange``.  A second jump per
+    round does not cut the round count: the cascade is bounded by the
+    neighbour-min's propagation radius, not label-tree height.
 
-    Neighbour-min keying is by PHYSICAL regime, exactly as before (r18,
-    guide §2.4):
+    Neighbour-min keying and hop count follow the regime:
 
-    * ``broadcast_state``: the labeling is broadcast (gated on its exact
-      count), so the join costs nothing either way — key on ``dst`` and
-      aggregate by ``src``, the edge checkpoint's preserved partitioning
-      key, making the aggregate EXCHANGE-FREE (the round plan carries
-      zero shuffle exchanges).
-    * otherwise (the 100 TB regime): key on ``src`` — the edge side of
-      the sort-merge join is already clustered AND sorted by src (see
+    * ``broadcast``: the labeling is broadcast, so the join costs nothing
+      either way — key on ``dst`` and aggregate by ``src``, the edge
+      checkpoint's preserved partitioning key, making the aggregate
+      EXCHANGE-FREE (the round plan carries zero shuffle exchanges).
+      Each extra hop is then one more map pass over the in-memory edge
+      checkpoint plus an exchange-free aggregate, and fewer rounds beat
+      cheaper rounds while driver planning + stage scheduling set the
+      round cost floor.  THREE hops per round is the measured optimum:
+      at sf0.1, 2 hops took 7 rounds / 5.65 s, 3 hops 5 rounds / 5.02 s,
+      4 hops 4 rounds / 6.14 s (per-round plan growth overtakes the
+      saved actions at 4).
+    * scale: key on ``src`` — the edge side of the sort-merge join is
+      already clustered AND sorted by src (see
       :func:`partitioned_edge_checkpoint`), so only the |V|-row labeling
-      shuffles per round; the aggregate (by dst) then moves map-side
-      partial minima, bounded by |V| per partition, never edge rows.
-      Scale rounds carry NO broadcast hints — the joins stay shuffle
-      joins that AQE skew-handles."""
+      shuffles per round; the aggregate (by dst) moves map-side partial
+      minima, bounded by |V| per partition, never edge rows.  ONE hop:
+      every extra hop would multiply the per-round shuffle bytes to save
+      a fraction of the rounds.  No broadcast hints — the joins stay
+      shuffle joins that AQE skew-handles.
+
+    Both regimes converge to the identical labeling: each hop is a value
+    no-op at the fixpoint, and the certificate only reports convergence
+    when a whole round changed nothing."""
+    e_view = v.edges
     cte: list[str] = []
-    prev = m_view
-    for h in range(1, hops + 1):
-        if broadcast_state:
+    prev = v.state
+    for h in range(1, (3 if broadcast else 1) + 1):
+        if broadcast:
             nb = (
                 f"nb{h} AS (SELECT /*+ BROADCAST({prev}) */ e.src AS v, "
                 f"min({prev}.l) AS nb_l FROM {e_view} e "
@@ -392,7 +543,7 @@ def _cc_round_sql(e_view: str, m_view: str, broadcast_state: bool, hops: int) ->
             f"FROM {prev} LEFT JOIN nb{h} ON {prev}.v = nb{h}.v)"
         )
         prev = f"m{h}"
-    lk_hint = "/*+ BROADCAST(lk) */ " if broadcast_state else ""
+    lk_hint = "/*+ BROADCAST(lk) */ " if broadcast else ""
     return (
         "WITH "
         + ",\n".join(cte)
@@ -402,175 +553,79 @@ def _cc_round_sql(e_view: str, m_view: str, broadcast_state: bool, hops: int) ->
     )
 
 
-def _cc_round(
-    m: DataFrame, edges: DataFrame, n_vertices: int | None = None
-) -> DataFrame:
-    """One propagation round: neighbour-min (twice in the broadcast
-    regime) then pointer jump.
-
-    ``m`` is the current labeling (v, l); ``edges`` is symmetric.  Labels
-    are always existing vertex ids (they start as vertex ids and only ever
-    copy), so the pointer-jump join is inner.
-
-    ``n_vertices`` is the labeling's exact row count (the previous round's
-    convergence-certificate count — constant across rounds): when it fits
-    the session broadcast threshold, every state-side join in the round is
-    broadcast (see :func:`hint_broadcast_if_small`) and the round runs
-    THREE neighbour-min hops instead of one (r18 introduced two, r19
-    measured three): with the state broadcast each extra hop is one more
-    map pass over the in-memory edge checkpoint plus an exchange-free
-    aggregate — nearly free — and fewer rounds beat cheaper rounds while
-    driver-side planning + stage scheduling is the round cost floor
-    (sf0.1 interleaved A/B: 2 hops = 7 rounds / 5.65 s, 3 hops = 5
-    rounds / 5.02 s, 4 hops = 4 rounds / 6.14 s — per-round plan growth
-    overtakes the saved actions at 4, so 3 is the measured optimum).
-    Above the threshold (the 100 TB regime) every extra hop would
-    multiply the per-round shuffle bytes to save a fraction of the
-    rounds — a net loss — so scale rounds keep ONE hop; both regimes
-    converge to the identical labeling (each hop is a value no-op at the
-    fixpoint, and the certificate only reports convergence when a whole
-    round changed nothing).
-
-    The jump join references the post-min labeling ``m3`` on BOTH sides
-    (probe + lookup).  That is NOT a double computation: Catalyst's
-    ReuseExchange rule deduplicates the identical exchange subtrees, so
-    the neighbour-min aggregate executes once per round and the second
-    reference reads the reused shuffle/broadcast (verified in the
-    captured round plans — ``ReusedExchange`` over the m3 subtree).
-    One jump per round: r18 tried doubling it (label <- m1.l[m1.l[l]],
-    shared lookup, broadcast reused) and round counts did NOT drop at
-    either driver SF — the cascade is bounded by the neighbour-min's
-    propagation radius, not label-tree height.
-
-    The round is issued as ONE ``spark.sql`` statement over two
-    uniquely-named temp views (r19; see :func:`_cc_round_sql` for the
-    measured driver-planning rationale).  The views are dropped before
-    returning — ``spark.sql`` analyzes eagerly, so the returned
-    DataFrame no longer needs them."""
-    spark = m.sparkSession
-    broadcast_state = (
-        n_vertices is not None
-        and n_vertices * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(spark)
-    )
-    hops = 3 if broadcast_state else 1
-    global _CC_VIEW_SEQ
-    _CC_VIEW_SEQ += 1
-    e_view = f"seisdb_cc_e_{_CC_VIEW_SEQ}"
-    m_view = f"seisdb_cc_m_{_CC_VIEW_SEQ}"
-    edges.createOrReplaceTempView(e_view)
-    m.createOrReplaceTempView(m_view)
-    try:
-        return spark.sql(_cc_round_sql(e_view, m_view, broadcast_state, hops))
-    finally:
-        spark.catalog.dropTempView(e_view)
-        spark.catalog.dropTempView(m_view)
-
-
 def connected_components(
     pairs: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 50
-) -> tuple[DataFrame, int]:
-    """Iterate :func:`_cc_round` over a pair list to the fixpoint (no label
-    changed).  Returns ``(labels, rounds_run)``; labels are (v, component).
+) -> tuple[DataFrame, list[Round]]:
+    """Run :func:`_cc_round_sql` on :func:`superstep_loop` over a pair list
+    to the fixpoint (no label changed).  Returns ``(labels, trace)``;
+    labels are (v, component), the trace has one :class:`Round` per
+    propagation round.  Raises RuntimeError after ``max_rounds``.
 
     The input may be directed and asymmetric: edges are symmetrized
-    internally (labels propagate dst->src in :func:`_cc_round`, and the
-    initial labeling is built from ``src`` — without symmetrization a
-    dst-only vertex would silently never be labeled).  Each round
-    localCheckpoints the labeling — cutting the lineage that would
-    otherwise grow 4x per round.
+    internally (labels propagate along ``dst -> src`` and the initial
+    labeling is built from ``src`` — without symmetrization a dst-only
+    vertex would silently never be labeled).  The pair list is counted
+    first so the symmetric edge checkpoint's partition count is sized
+    from the real row count, and it is laid out hash-partitioned +
+    sorted by src (:func:`partitioned_edge_checkpoint`); it is released
+    on every exit path.
 
-    Convergence probe — the sssp certificate discipline: per-vertex
-    labels are monotone NON-INCREASING across rounds (neighbour-min
-    takes ``least``; the pointer jump maps l to m1's label for vertex l,
-    itself <= l) over a CONSTANT vertex set (every label is an existing
-    vertex id, so the jump's inner join drops nothing), so the
-    (row count, BIGINT label sum) pair is unchanged iff NO label
-    changed — and it comes from the SAME aggregate action that
-    materializes the round's checkpoint.  This replaces the earlier
-    nxt-join-previous probe, saving one |V|-row equi-join (two
-    exchanges) per round.  Overflow headroom (the PageRank discipline):
-    under ANSI mode (the Spark 4 default) an overflowing BIGINT sum
-    raises mid-loop; under non-ANSI it wraps mod 2^64, and a wrap could
-    fake convergence only if one round's TOTAL label decrease were an
-    exact positive multiple of 2^64 — impossible while |V| * max(vertex
-    id) < 2^64 (the x1000 tier is ~2.6e10 ids * 2.6e7 vertices ~ 7e17).
-    The precondition is GUARDED at runtime, not just documented (r17
-    advice): the seed aggregate takes try_sum (NULL, never a raise, on
-    overflow) plus max(l) — the max VERTEX id, since labels only
-    decrease — and the loop refuses to run when |V| * max_id >= 2^63
-    (the conservative signed bound), converting both failure modes
-    (ANSI mid-loop raise, non-ANSI silent wrap) into one principled
-    early refusal; densely re-map vertex ids first (zipWithIndex /
-    hash-rank) at that scale.  Past the guard, every round's sum is
-    bounded by the seed sum (labels are non-increasing), so the plain
-    F.sum in the loop can neither raise nor wrap.
+    Convergence certificate: per-vertex labels are monotone
+    NON-INCREASING across rounds (neighbour-min takes ``least``; the
+    pointer jump maps l to the label of vertex l, itself <= l) over a
+    CONSTANT vertex set (every label is an existing vertex id, so the
+    jump's inner join drops nothing), so the (row count, BIGINT label
+    sum) pair is unchanged iff NO label changed — with no compare join.
 
-    Each round's executed plan is appended to :data:`CC_ROUND_PLANS`
-    for the scale harness (the final labeling's plan cannot show the
-    propagation joins), and the superseded previous round's
-    checkpointed blocks are released once the round's aggregate has
-    materialized its successor (the k-core discipline: driver state is
-    one (count, sum) pair + the CURRENT labeling; a 50-round cascade
-    must not hold 50 rounds of blocks)."""
-    CC_ROUND_PLANS.clear()
-    # count the pair list first (cheap: materializes the caller's lazy
-    # checkpoint, which the symmetrize below reads anyway) so the
-    # symmetric edge checkpoint's partition count is sized from the REAL
-    # row count (guide §2.2) — and lay it out hash-partitioned + sorted
-    # by src with the partitioning preserved into the checkpoint scan,
-    # so scale-regime rounds never re-shuffle or re-sort the edge side
-    # and broadcast-regime rounds get exchange-free neighbour-min
-    # aggregates (see partitioned_edge_checkpoint).
+    Why the certificate is wrap-safe: under ANSI mode (the Spark 4
+    default) an overflowing BIGINT sum raises mid-loop; under non-ANSI it
+    wraps mod 2^64, and a wrap could fake convergence only if one round's
+    TOTAL label decrease were an exact positive multiple of 2^64 —
+    impossible while |V| * max(vertex id) < 2^63.  The seed aggregate
+    takes try_sum (NULL, never a raise, on overflow) plus max(l), the max
+    vertex id, and the loop refuses to run when |V| * max_id >= 2^63,
+    turning both failure modes into one early ValueError; densely re-map
+    vertex ids first (zipWithIndex / hash-rank) at that scale.  Past the
+    guard every round's sum is bounded by the seed sum (labels only
+    decrease), so the plain sum in the loop can neither raise nor wrap."""
     n_pairs = pairs.count()
     edges = partitioned_edge_checkpoint(
         symmetrize(pairs, src, dst), "src", 2 * n_pairs
     )
-    m = (
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("v"), F.col("src").alias("l"))
-        # lazy: the seed aggregate below is the materializing action —
-        # an eager build here would pay one extra job for the same pass
-        .localCheckpoint(eager=False)
-    )
-    seed = m.agg(
-        F.count(F.lit(1)),
-        F.try_sum("l").cast("bigint"),  # NULL (not an ANSI raise) on overflow
-        F.max("l").cast("bigint"),
-    ).first()
-    prev_cert = (seed[0], seed[1])
-    n_vertices, max_id = int(seed[0] or 0), int(seed[2] or 0)
-    if n_vertices * max_id >= 2**63:
-        # the (count, label-sum) certificate is only wrap-sound while the
-        # true label sums stay representable; refuse rather than risk a
-        # silently faked convergence on a future huge-id tier (r17 advice)
-        release_checkpoint(edges)
-        release_checkpoint(m)
-        raise ValueError(
-            "connected_components certificate precondition violated: "
-            f"|V| ({n_vertices}) * max vertex id ({max_id}) >= 2^63 — "
-            "densely re-map vertex ids before clustering at this scale"
+    try:
+        m = (
+            edges.select("src")
+            .distinct()
+            .select(F.col("src").alias("v"), F.col("src").alias("l"))
+            # lazy: the seed aggregate below is the materializing action
+            .localCheckpoint(eager=False)
         )
-    for i in range(1, max_rounds + 1):
-        nxt_join = _cc_round(m, edges, n_vertices)
-        nxt = nxt_join.localCheckpoint(eager=False)
-        cert = tuple(
-            nxt.agg(F.count(F.lit(1)), F.sum("l").cast("bigint")).first()
+        seed = m.agg(
+            F.count(F.lit(1)),
+            F.try_sum("l").cast("bigint"),  # NULL (not an ANSI raise) on overflow
+            F.max("l").cast("bigint"),
+        ).first()
+        n_vertices, max_id = int(seed[0] or 0), int(seed[2] or 0)
+        if n_vertices * max_id >= 2**63:
+            release_checkpoint(m)
+            raise ValueError(
+                "connected_components certificate precondition violated: "
+                f"|V| ({n_vertices}) * max vertex id ({max_id}) >= 2^63 — "
+                "densely re-map vertex ids before clustering at this scale"
+            )
+        labels, trace = superstep_loop(
+            m,
+            _cc_round_sql,
+            max_rounds=max_rounds,
+            certificate=[F.sum("l").cast("bigint")],
+            seed_cert=(seed[0], seed[1]),
+            edges=edges,
+            name="connected_components",
+            raise_at_cap=True,
         )
-        CC_ROUND_PLANS.append(final_plan(nxt_join))
-        release_checkpoint(m)  # the aggregate materialized nxt
-        m = nxt
-        if cert == prev_cert:
-            release_checkpoint(edges)  # the labeling no longer reads it
-            return m.select("v", F.col("l").alias("component")), i
-        prev_cert = cert
-    # non-convergence: nothing useful survives the raise, so release the
-    # symmetrized edge set AND the last labeling before failing — the
-    # convergence path releases edges but this path otherwise leaked both
-    # for the session lifetime (r16 advice).
-    release_checkpoint(edges)
-    release_checkpoint(m)
-    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
+    finally:
+        release_checkpoint(edges)  # the labeling no longer reads it
+    return labels.select("v", F.col("l").alias("component")), trace
 
 
 #: Above this many verified dup pairs, :func:`cc_auto` switches from the
@@ -598,5 +653,5 @@ def cc_auto(
     ).localCheckpoint(eager=True)
     if edges.count() <= max_single_task_edges:
         return cc_exact_lazy(edges, src, dst)
-    labels, _rounds = connected_components(edges, src, dst)
+    labels, _trace = connected_components(edges, src, dst)
     return labels

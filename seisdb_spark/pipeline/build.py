@@ -166,15 +166,11 @@ def assemble_series(
         raise ValueError(f"kind must be SGT or DGF, got {kind}")
 
     long = _unpivot(snapshots, paras)
-    if kind == "SGT":
-        # J1: dimension side (selected points) is broadcast; the fact stream
-        # never shuffles for the gather, and the join attaches gll_id.
-        gathered = long.join(F.broadcast(points), join_keys, "inner")
-    else:
-        # J2: semi-gather by global id; keep the owner-cell columns from the
-        # points side for the output record.
-        gathered = long.join(F.broadcast(points), join_keys, "inner")
-
+    # J1 (SGT) / J2 (DGF): the dimension side (selected points) is
+    # broadcast, so the fact stream never shuffles for the gather; the
+    # join attaches what the keys lack — gll_id for J1, the owner-cell
+    # columns for J2's output record.
+    gathered = long.join(F.broadcast(points), join_keys, "inner")
     gathered = gathered.join(F.broadcast(steps), ["proc", "step"], "left_semi")
 
     series = (
@@ -456,6 +452,49 @@ def decode_records(
 # ---------------------------------------------------------------------------
 # end-to-end composition (the reference's create_db)
 # ---------------------------------------------------------------------------
+def _create_db(
+    kind: str,
+    spark: SparkSession,
+    model_glob: str,
+    force_dirs: list[str],
+    nspec: int,
+    step0: int,
+    step1: int,
+    dstep: int,
+    *,
+    network: str,
+    station: str,
+    dt: float,
+    points_per_element: int,
+    encoding_level: int,
+    name_data: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The create_db composition shared by :func:`sgt_build` and
+    :func:`dgf_build`: ibool -> point selection -> valid steps ->
+    snapshot scan -> gather/assembly -> encode -> metadata."""
+    ibool = specfem.read_ibool(spark, model_glob, nspec)
+    points = select_gll_points(ibool, points_per_element)
+    steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
+    # the reference raises when no step survives P3 (DDBbase.py:82-84); the
+    # eager probe here is a metadata-only listing query, not a data read
+    if not steps.head(1):
+        raise ValueError("no valid steps: no snapshot step exists in all force dirs")
+    if kind == "SGT":
+        snaps = specfem.read_strain_snapshots(spark, force_dirs, nspec, name_data)
+        n_para, forder = 6, "NEZ"
+    else:  # displacement snapshots carry their own point count
+        snaps = specfem.read_disp_snapshots(spark, force_dirs, None, name_data)
+        n_para, forder = 3, "ENZ"
+    series = assemble_series(snaps, points, steps, kind=kind)
+    records = add_start_offsets(encode_records(series, encoding_level))
+    meta = db_meta(
+        spark, records, steps,
+        network=network, station=station, kind=kind,
+        n_force=3, n_para=n_para, dt=dt, nspec=nspec, forder=forder,
+    )
+    return records, meta, steps
+
+
 def sgt_build(
     spark: SparkSession,
     model_glob: str,
@@ -477,22 +516,12 @@ def sgt_build(
     Returns (records_with_start, db_meta, valid_steps); caller writes with
     write_db.  Nothing is collected; every stage is a DataFrame.
     """
-    ibool = specfem.read_ibool(spark, model_glob, nspec)
-    points = select_gll_points(ibool, points_per_element)
-    steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
-    # the reference raises when no step survives P3 (DDBbase.py:82-84); the
-    # eager probe here is a metadata-only listing query, not a data read
-    if not steps.head(1):
-        raise ValueError("no valid steps: no snapshot step exists in all force dirs")
-    snaps = specfem.read_strain_snapshots(spark, force_dirs, nspec, name_data)
-    series = assemble_series(snaps, points, steps, kind="SGT")
-    records = add_start_offsets(encode_records(series, encoding_level))
-    meta = db_meta(
-        spark, records, steps,
-        network=network, station=station, kind="SGT",
-        n_force=3, n_para=6, dt=dt, nspec=nspec, forder="NEZ",
+    return _create_db(
+        "SGT", spark, model_glob, force_dirs, nspec, step0, step1, dstep,
+        network=network, station=station, dt=dt,
+        points_per_element=points_per_element,
+        encoding_level=encoding_level, name_data=name_data,
     )
-    return records, meta, steps
 
 
 def dgf_build(
@@ -513,17 +542,9 @@ def dgf_build(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The full DGF create_db (DDGF.py:40-190): displacement scan S5,
     id-gather J2, [para][force][time] flatten, same encode tail."""
-    ibool = specfem.read_ibool(spark, model_glob, nspec)
-    points = select_gll_points(ibool, points_per_element)
-    steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
-    if not steps.head(1):
-        raise ValueError("no valid steps: no snapshot step exists in all force dirs")
-    snaps = specfem.read_disp_snapshots(spark, force_dirs, None, name_data)
-    series = assemble_series(snaps, points, steps, kind="DGF")
-    records = add_start_offsets(encode_records(series, encoding_level))
-    meta = db_meta(
-        spark, records, steps,
-        network=network, station=station, kind="DGF",
-        n_force=3, n_para=3, dt=dt, nspec=nspec, forder="ENZ",
+    return _create_db(
+        "DGF", spark, model_glob, force_dirs, nspec, step0, step1, dstep,
+        network=network, station=station, dt=dt,
+        points_per_element=points_per_element,
+        encoding_level=encoding_level, name_data=name_data,
     )
-    return records, meta, steps

@@ -10,11 +10,14 @@ peeling (k-core), and reachability/distance (multi-source BFS hop
 counts) — each expressed as plain DataFrame joins+aggregates, which is
 exactly how they run on any Spark cluster (GraphX/GraphFrames do the
 same join-shuffle per superstep / neighborhood-intersection under the
-hood).  The two driver-loop operators (k-core, BFS) capture each round's
-executed plan in ``KCORE_ROUND_PLANS`` / ``BFS_ROUND_PLANS`` so the
-scale harness can assert superstep plan shape, and register with
-``fixpoint=True`` so the bench/tier harnesses time the loop honestly
-(it runs at plan build under the registry cache).
+hood).  The fixpoint loops (k-core, BFS, SSSP, and the WCC entry over
+connected components) run on ``functions/graph.superstep_loop``, which
+returns each loop's per-round trace next to its result: every registry
+entry has a ``*_run(spark, sf_dir) -> (df, trace)`` composition
+(:data:`FIXPOINT_RUNS`) for plan consumers, and the registered query is
+its DataFrame.  They register with ``fixpoint=True`` so the bench/tier
+harnesses time the loop honestly (it runs at plan build under the
+registry cache).
 
 Exact-integer discipline: ranks live in BIGINT "nano-rank" units
 (initial rank 10^9 per node) and every per-edge contribution is a BIGINT
@@ -40,42 +43,34 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from seisdb_spark.functions.graph import (
-    CC_ROUND_PLANS,  # noqa: F401  (re-exported: scale_stress reads round-
-    # plan lists via getattr(graph_queries, attr); the CC loop lives in
-    # functions/graph.py and mutates this list IN PLACE — clear/append,
-    # never rebind — so the alias stays live)
+    Round,
+    Views,
     connected_components,
-    hint_broadcast_if_small,
+    partitioned_edge_checkpoint,
     release_checkpoint,
+    superstep_loop,
+    symmetrize,
 )
-from seisdb_spark.plancheck import final_plan, has_node
+from seisdb_spark.plancheck import has_node
 from seisdb_spark.queries.registry import query, register_session_checkpoint
 from seisdb_spark.sources.tables import load_table
 
-#: Executed per-round plans of the LAST driver-loop run (one entry per
-#: peel / frontier-expansion round), captured for the scale harness: the
-#: returned DataFrame's plan only shows the final aggregate over the last
-#: checkpointed iterate — the per-round joins execute behind localCheckpoint
-#: boundaries during the loop, so a plan predicate that reads only the final
-#: plan would certify nothing about the supersteps that dominate the cost.
-KCORE_ROUND_PLANS: list[str] = []
-BFS_ROUND_PLANS: list[str] = []
 
-
-def round_plans_ok(plans: list[str]) -> bool:
-    """Scale-harness predicate over captured driver-loop round plans: at
-    least one round ran, and every round's executed superstep is
-    equi-join-only (no cartesian / nested-loop of real extents),
-    partition-local (no global range sort), JVM-side (no Python boundary),
-    and reads its predecessor through a checkpoint scan (Scan ExistingRDD)
-    instead of re-running the whole loop history's lineage.
+def round_plans_ok(trace: list[Round]) -> bool:
+    """Scale-harness predicate over a loop's per-round trace: at least one
+    round ran, and every round's executed superstep is equi-join-only (no
+    cartesian / nested-loop of real extents), partition-local (no global
+    range sort), JVM-side (no Python boundary), and reads its
+    predecessor through a checkpoint scan (Scan ExistingRDD) instead of
+    re-running the whole loop history's lineage.
 
     An ``EmptyRelation`` round is accepted in place of the checkpoint
-    scan: with the gated broadcast of the round state (r18), AQE's
+    scan: with the gated broadcast of the round state, AQE's
     empty-relation propagation collapses a round whose broadcast frontier
     is empty (BFS's terminating round) into a no-op plan that scans
     nothing — it trivially cannot re-run loop history, which is what the
     ExistingRDD requirement certifies."""
+    plans = [r.plan for r in trace]
     return bool(plans) and all(
         not has_node(p, "CartesianProduct")
         and not has_node(p, "NestedLoopJoin")
@@ -85,31 +80,6 @@ def round_plans_ok(plans: list[str]) -> bool:
         for p in plans
     )
 
-
-# shared with functions/graph.py (the CC pointer-jump loop): one release
-# implementation, one loud-on-drift signal, one persistent-RDD-shrink test
-_release_checkpoint = release_checkpoint
-
-#: Monotone suffix for per-loop temp-view names (the CC discipline —
-#: functions/graph._CC_VIEW_SEQ): unique per loop invocation so concurrent
-#: driver-thread loops in one session can never read each other's
-#: bindings.  One suffix per INVOCATION; within a loop the same name is
-#: re-bound per round via createOrReplaceTempView.
-_LOOP_VIEW_SEQ = 0
-
-
-def _loop_view_names(*roles: str) -> tuple[str, ...]:
-    global _LOOP_VIEW_SEQ
-    _LOOP_VIEW_SEQ += 1
-    return tuple(f"seisdb_loop_{r}_{_LOOP_VIEW_SEQ}" for r in roles)
-
-
-def _drop_views(spark, *names: str) -> None:
-    for n in names:
-        try:
-            spark.catalog.dropTempView(n)
-        except Exception:
-            pass  # best-effort cleanup; views die with the session anyway
 
 #: nano-rank scale: initial mass per node.
 PR_SCALE = 1_000_000_000
@@ -568,125 +538,76 @@ KCORE_MAX_PEELS = 24
 
 def kcore_core(
     edges: DataFrame, k: int = KCORE_K, max_peels: int = KCORE_MAX_PEELS
-) -> DataFrame:
+) -> tuple[DataFrame, list[Round]]:
     """Fixpoint k-core peeling over a canonical (u < v) edge set: drop
     every node with degree < k, re-derive degrees, repeat until the edge
-    set stops changing; return the core membership (part_id,
-    core_degree).
+    set stops changing.  Returns ``(membership, trace)``: the core
+    membership (part_id, core_degree) and one :class:`Round` per peel.
 
-    Representation (r18, guide §2.4): the survivor set is held SYMMETRIC
-    ((src, dst) both directions, one explode — so degree(n) = count of
-    rows with src = n, no per-round two-scan union) and checkpointed
-    hash-partitioned by ``src`` with the partitioning preserved into the
-    checkpoint scan (functions/graph.partitioned_edge_checkpoint), so
-    the per-round degree aggregate needs NO exchange and the src-keyed
-    survivor semi-join needs no edge-side shuffle.
+    The state is a set of directed rows (a, b), seeded with the SYMMETRIC
+    edge set (both directions, one explode) as a checkpoint
+    hash-partitioned by ``src`` with the partitioning preserved into its
+    scan (:func:`partitioned_edge_checkpoint`).  A peel is ONE SQL
+    statement: the keep set K = nodes with >= k rows, then the rows whose
+    ``dst`` is in K — a single semi-join.  Rows (a, b) of a removed node
+    a stay while b lives, but they cannot bring a back: a node's row count
+    is its number of live neighbours, which only decreases, so a removed
+    node never again reaches k.  Every live node's rows are therefore
+    exactly its edges in the live subgraph, the keep sets are those of
+    the two-sided peel (so is the core; the row count can take one more
+    round to settle when a node loses its last live neighbour), and the
+    membership keeps the nodes with >= k rows.
 
-    Each peel is ONE driver action (the survivor-set count, which also
-    materializes the round's checkpoint and is the convergence test —
-    the keep set is folded INTO the survivor plan: its two broadcast-
-    hinted references share one computation via ReuseExchange, replacing
-    the r17 shape's separate keep checkpoint + count, i.e. two actions
-    per round became one).  The broadcast gate uses the initial node
-    count — a valid bound every round, since peeling only removes nodes;
-    above the session threshold the hints are no-ops and the round keeps
-    shuffle joins that AQE skew-handles (survivor checkpoints are then
-    built under AQE, trading the preserved partitioning for runtime
-    skew handling — at that scale the dst-keyed semi-join shuffles
-    anyway).
+    In the broadcast regime K is broadcast and the round is
+    exchange-free, so :func:`superstep_loop` checkpoints it with the
+    partitioning kept: every peel's degree aggregate is partition-local
+    and the state never shuffles.  The gate uses the initial node count —
+    a valid bound every round, since peeling only removes nodes.  Above
+    the threshold the semi-join shuffles the rows by ``dst`` (the one
+    re-keying a non-broadcast K needs) and AQE skew-handles it.
 
-    Each round's executed plan is appended to ``KCORE_ROUND_PLANS`` (the
-    scale harness asserts its predicate over them — the final membership
-    plan cannot show the peel joins), and superseded rounds' checkpointed
-    blocks are released once the next round has materialized; the
-    driver's only live state is two scalar edge counts plus the CURRENT
-    survivor set.
-
-    Raises RuntimeError if the fixpoint is not reached within
-    ``max_peels``: the DuckDB oracle unrolls exactly that many peels, so
-    an unconverged engine result would be compared against a
-    mid-cascade oracle state — fail loudly instead (observed rounds at
-    driver SFs: <= 5)."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _aqe_off,
-        _auto_broadcast_bytes,
-        partitioned_edge_checkpoint,
-        symmetrize,
-    )
-
-    KCORE_ROUND_PLANS.clear()
-    spark = edges.sparkSession
+    Peeling only removes rows, so an unchanged row count IS the fixpoint.
+    Raises RuntimeError if it is not reached within ``max_peels``: the
+    DuckDB oracle unrolls exactly that many peels, so an unconverged
+    result would be compared against a mid-cascade oracle state."""
     n_canonical = edges.count()  # sizes the symmetric layout
     e = partitioned_edge_checkpoint(
         symmetrize(edges, "u", "v"), "src", 2 * n_canonical, eager=False
     )
     # one aggregate action: materializes the symmetric checkpoint AND
     # yields the node count that gates every round's broadcast hints
-    # (count_distinct over the preserved src partitioning is itself
-    # exchange-free in its partial phase)
     first = e.agg(
         F.count(F.lit(1)).alias("m"), F.countDistinct("src").alias("nv")
     ).first()
-    m, n_nodes = int(first[0] or 0), int(first[1] or 0)
-    broadcast_keep = (
-        n_nodes * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(spark)
+
+    def peel(v: Views, broadcast: bool) -> str:
+        hint = "/*+ BROADCAST(keep) */ " if broadcast else ""
+        return (
+            f"WITH keep AS (SELECT src FROM {v.state} "
+            f"GROUP BY src HAVING count(*) >= {int(k)})\n"
+            f"SELECT {hint}e.src, e.dst FROM {v.state} e "
+            f"JOIN keep ON e.dst = keep.src"
+        )
+
+    core, trace = superstep_loop(
+        e,
+        peel,
+        max_rounds=max_peels,
+        seed_cert=(first[0],),
+        broadcast_rows=int(first[1] or 0),
+        name="k-core peeling",
+        raise_at_cap=True,
     )
-    e_owned = True  # the symmetric checkpoint is loop-built, never the input
-    # The whole peel (degree filter + both semi-joins) is ONE spark.sql
-    # statement over a per-round re-bound temp view (r19, guide §7.3 —
-    # the CC-round discipline, see functions/graph._cc_round_sql): the
-    # former per-op DataFrame composition paid ~8 eager analyzer passes
-    # of driver time per round; one SQL statement analyzes the identical
-    # tree once.  The keep CTE's two references still deduplicate via
-    # ReuseExchange, exactly as the two hinted DataFrame refs did.
-    (e_view,) = _loop_view_names("kcore_e")
-    hint = "/*+ BROADCAST(ku), BROADCAST(kv) */ " if broadcast_keep else ""
-    peel_sql = (
-        f"WITH keep AS (SELECT src FROM {e_view} "
-        f"GROUP BY src HAVING count(*) >= {int(k)})\n"
-        f"SELECT {hint}e.src, e.dst FROM {e_view} e "
-        f"JOIN keep ku ON e.src = ku.src JOIN keep kv ON e.dst = kv.src"
-    )
-    try:
-        for _ in range(max_peels):
-            if m == 0:
-                break
-            e.createOrReplaceTempView(e_view)
-            e2_join = spark.sql(peel_sql)
-            if broadcast_keep:
-                # exchange-free plan (broadcast semi-filters over the
-                # src-partitioned scan): build the checkpoint AQE-off so the
-                # scan's partitioning survives into the next round — nothing
-                # for AQE to do in a plan with no exchanges
-                with _aqe_off(spark):
-                    e2 = e2_join.localCheckpoint(eager=False)
-            else:
-                e2 = e2_join.localCheckpoint(eager=False)
-            m2 = e2.count()  # the round's ONE action: materialize + converge-test
-            KCORE_ROUND_PLANS.append(final_plan(e2_join))
-            if m2 == m:
-                _release_checkpoint(e2)  # same edge set — keep reporting on e
-                break
-            if e_owned:
-                _release_checkpoint(e)  # superseded survivor set
-            e, m, e_owned = e2, m2, True
-        else:
-            raise RuntimeError(
-                f"k-core peeling did not converge within {max_peels} rounds — "
-                "the unrolled oracle would compare a mid-cascade state; raise "
-                "KCORE_MAX_PEELS (and regenerate the oracle) deliberately"
-            )
-    finally:
-        _drop_views(spark, e_view)
-    # at the fixpoint every endpoint has degree >= k by construction;
-    # degrees read straight off the symmetric survivor set, exchange-free
-    # when its partitioning survived (broadcast regime)
-    return (
-        e.groupBy("src")
+    # core degrees read straight off the rows, exchange-free when the
+    # partitioning survived (broadcast regime); removed nodes' leftover
+    # rows number < k
+    membership = (
+        core.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+        .where(F.col("core_degree") >= k)
         .select(F.col("src").cast("bigint").alias("part_id"), "core_degree")
     )
+    return membership, trace
 
 
 def _kcore_oracle() -> str:
@@ -740,12 +661,11 @@ def _kcore_oracle() -> str:
     "iteratively drop nodes with degree < k until every survivor has "
     "core degree >= k, return the membership with exact core degrees.  "
     "Engine shape: a driver-side fixpoint loop whose state is two edge "
-    "COUNTS; each peel is one degree aggregate + two node-keyed "
-    "semi-filter equi-joins over the symmetric, src-partitioned "
-    "localCheckpointed survivor set (r18: the preserved partitioning "
-    "makes the degree aggregate exchange-free and the round costs ONE "
-    "driver action - the keep set is folded into the survivor plan and "
-    "deduplicated by ReuseExchange), "
+    "COUNTS; each peel is one degree aggregate + one dst-keyed "
+    "semi-filter equi-join over the src-partitioned localCheckpointed "
+    "rows (the preserved partitioning makes every peel exchange-free "
+    "and the round costs ONE driver action - the keep set is folded "
+    "into the survivor plan), "
     "so per-round cost shrinks with the cascade and nothing corpus-"
     "sized ever reaches the driver.  Peeling is anti-monotone — NOT "
     "expressible as one Catalyst plan or a recursive CTE with a "
@@ -763,18 +683,20 @@ def _kcore_oracle() -> str:
     fixpoint=True,
 )
 def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    e = copurchase_edges(li)
+    return graph_kcore_membership_run(spark, sf_dir)[0]
+
+
+def graph_kcore_membership_run(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[Round]]:
+    e = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     # the returned membership reads only the loop's own (materialized)
-    # symmetric survivor checkpoints, so the canonical co-purchase
-    # checkpoint is dead once the peel exits — before r18 every fixpoint
-    # bench pass leaked one edge-set RDD for the session (the sssp/bfs/wcc
-    # wrappers already released theirs); finally so a mid-loop failure
-    # cannot skip it.
+    # survivor checkpoint, so the co-purchase checkpoint is dead once the
+    # peel exits; finally so a mid-loop failure cannot skip the release
     try:
         return kcore_core(e)
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
 
 
 # ---------------------------------------------------------------------------
@@ -799,129 +721,70 @@ def bfs_hops(
     edges: DataFrame,
     seed_mod: int = BFS_SEED_MOD,
     max_hops: int = BFS_MAX_HOPS,
-) -> DataFrame:
+) -> tuple[DataFrame, list[Round]]:
     """Multi-source BFS hop distance over a canonical (u < v) edge set:
-    seeds are nodes divisible by ``seed_mod``; returns (part_id, hops) =
-    distance to the NEAREST seed for every node within ``max_hops``.
+    seeds are nodes divisible by ``seed_mod``.  Returns ``(hops, trace)``:
+    (part_id, hops) = distance to the NEAREST seed for every node within
+    ``max_hops``, and one :class:`Round` per frontier expansion.
 
-    Engine shape — the frontier-expansion superstep (the k-core loop's
-    sibling): per round ONE src-keyed equi-join of the symmetrized edge
-    table against the previous (checkpointed) frontier, a dst distinct,
-    and an anti-join against the visited set; driver state is ONE scalar
-    (frontier size).  The symmetrized view is a stateless projection over
-    the already-checkpointed edge set (re-projecting per round is map-only
-    — cheaper than materializing 2m rows a second time), each frontier is
-    localCheckpointed so round h+1 joins a materialized table, and the
-    visited set is a union of <= max_hops checkpointed frontiers — all of
-    them part of the OUTPUT, so unlike k-core's released survivor sets
-    nothing can be freed early, but the held-checkpoint count is bounded
-    by the hop cap, not the cascade length.  Each round's executed plan
-    is appended to ``BFS_ROUND_PLANS`` for the scale harness.
+    The frontier-expansion superstep: per round ONE src-keyed equi-join
+    of the symmetrized edge table against the checkpointed frontier, a
+    dst distinct, and an anti-join against the visited set; each new
+    frontier row carries its level, the round number.  The frontier is
+    an accumulating :func:`superstep_loop` state: the visited set is the
+    union of the seeds and every frontier, all of them part of the
+    OUTPUT, so nothing can be freed early — but the held checkpoints are
+    bounded by the hop cap, not the cascade length.  The loop gates on the visited count
+    (never smaller than the frontier), so in the broadcast regime both
+    the frontier and the visited set are broadcast and the hop never
+    shuffles edge rows.  The broadcast-regime edge side is a stateless
+    one-explode projection over the caller's checkpoint (materializing a
+    second 2m-row copy up front costs more than it saves at driver
+    scales); the scale regime sort-merges against a src-partitioned copy
+    built on the first scale hop, so only the frontier moves per hop.
 
     BFS levels are set-unique (level h = nodes reachable in h hops and
-    not fewer — independent of visit order), so the hop table value-hashes
-    across engines."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _auto_broadcast_bytes,
-        partitioned_edge_checkpoint,
-        symmetrize,
-    )
-
-    BFS_ROUND_PLANS.clear()
-    spark = edges.sparkSession
-    # symmetric view as ONE explode (r18): the union form scanned the
-    # canonical checkpoint twice per consumer.  Still a stateless
-    # projection - broadcast-regime hops are map-only over it, so
-    # materializing a second 2m-row copy up front would COST more than it
-    # saves at driver SFs (measured: +0.2 s/pass); the partitioned copy
-    # below is built lazily, only when a hop actually leaves the
-    # broadcast regime.
+    not fewer — independent of visit order), so the hop table
+    value-hashes across engines."""
     sym = symmetrize(edges, "u", "v")
-    sym_part: DataFrame | None = None  # scale-regime representation
     seeds = (
-        # filter BEFORE the distinct (guide 2.3): the mod filter keeps
-        # ~1/seed_mod of the rows, so the distinct aggregates a sliver of
-        # the edge endpoints instead of all of them
+        # filter BEFORE the distinct: the mod filter keeps ~1/seed_mod
+        # of the rows, so the distinct aggregates a sliver of the edge
+        # endpoints instead of all of them
         sym.select(F.col("src").alias("node"))
         .where(F.col("node") % seed_mod == 0)
         .distinct()
+        .select("node", F.lit(0).cast("bigint").alias("hops"))
         .localCheckpoint(eager=False)
     )
-    # exact frontier/visited row counts (the seed count materializes the
-    # seed checkpoint the first round reads anyway) gate the round hints;
-    # above the session broadcast threshold the hints are no-ops and the
-    # hop keeps its shuffle joins (guide 3.1/2.4).
-    # Each hop (frontier expansion + dst distinct + visited anti-join) is
-    # ONE spark.sql statement over per-round re-bound temp views (r19,
-    # guide §7.3 — the CC-round discipline, see functions/graph.
-    # _cc_round_sql): the former per-op DataFrame composition paid ~6
-    # eager analyzer passes of driver time per hop; one SQL statement
-    # analyzes the identical tree once.  Join keying, regime gating, and
-    # hint gating are unchanged.
-    e_sym_view, e_part_view, f_view, d_view = _loop_view_names(
-        "bfs_esym", "bfs_epart", "bfs_f", "bfs_d"
+
+    def expand(v: Views, broadcast: bool) -> str:
+        h_f, h_d = (
+            ("/*+ BROADCAST(f) */ ", "/*+ BROADCAST(d) */ ")
+            if broadcast
+            else ("", "")
+        )
+        return (
+            f"WITH ex AS (SELECT {h_f}DISTINCT e.dst AS node "
+            f"FROM {v.edges} e JOIN {v.state} f ON e.src = f.node)\n"
+            f"SELECT {h_d}ex.node, CAST({v.round} AS BIGINT) AS hops FROM ex "
+            f"LEFT ANTI JOIN {v.history} d ON ex.node = d.node"
+        )
+
+    dist, trace = superstep_loop(
+        seeds,
+        expand,
+        max_rounds=max_hops,
+        edges=sym,
+        partition_edges=True,
+        accumulate=True,
     )
-    sym.createOrReplaceTempView(e_sym_view)
-    try:
-        n_frontier = seeds.count()
-        n_visited = n_frontier
-        bcast_limit = _auto_broadcast_bytes(spark)
-        dist = seeds.select("node", F.lit(0).cast("bigint").alias("hops"))
-        frontier = seeds
-        for h in range(1, max_hops + 1):
-            if n_frontier * LOOP_STATE_ROW_BYTES <= bcast_limit:
-                # broadcast regime: the frontier is broadcast; the edge
-                # side is the in-stage projection - the hop never
-                # shuffles edge rows
-                e_view, h_frontier = e_sym_view, "/*+ BROADCAST(f) */ "
-            else:
-                # scale regime (frontier over the threshold): sort-merge
-                # against a symmetric copy checkpointed hash-partitioned
-                # + sorted by src with the partitioning preserved into
-                # the scan - built ONCE, on the first scale hop; the
-                # edge side then never re-shuffles or re-sorts, only the
-                # frontier moves per hop
-                if sym_part is None:
-                    sym_part = partitioned_edge_checkpoint(
-                        sym, "src", 2 * edges.count(), eager=False
-                    )
-                    sym_part.createOrReplaceTempView(e_part_view)
-                e_view, h_frontier = e_part_view, ""
-            h_dist = (
-                "/*+ BROADCAST(d) */ "
-                if n_visited * LOOP_STATE_ROW_BYTES <= bcast_limit
-                else ""
-            )
-            frontier.createOrReplaceTempView(f_view)
-            dist.createOrReplaceTempView(d_view)
-            nxt_join = spark.sql(
-                f"WITH ex AS (SELECT {h_frontier}DISTINCT e.dst AS node "
-                f"FROM {e_view} e JOIN {f_view} f ON e.src = f.node)\n"
-                f"SELECT {h_dist}ex.node FROM ex "
-                f"LEFT ANTI JOIN {d_view} d ON ex.node = d.node"
-            )
-            nxt = nxt_join.localCheckpoint(eager=False)
-            c = nxt.count()
-            n_frontier, n_visited = c, n_visited + c
-            BFS_ROUND_PLANS.append(final_plan(nxt_join))
-            if c == 0:
-                _release_checkpoint(nxt)  # empty frontier: nothing to keep
-                break
-            dist = dist.unionByName(
-                nxt.select("node", F.lit(h).cast("bigint").alias("hops"))
-            )
-            frontier = nxt
-    finally:
-        # the hop table reads only the (materialized) seed/frontier
-        # checkpoints - the scale-regime edge checkpoint (if any hop
-        # built it) is dead once the expansion exits; finally so a
-        # mid-loop failure cannot strand it
-        if sym_part is not None:
-            _release_checkpoint(sym_part)
-        _drop_views(spark, e_sym_view, e_part_view, f_view, d_view)
-    return dist.select(
-        F.col("node").cast("bigint").alias("part_id"), F.col("hops").alias("hops")
+    return (
+        dist.select(
+            F.col("node").cast("bigint").alias("part_id"),
+            F.col("hops").cast("bigint").alias("hops"),
+        ),
+        trace,
     )
 
 
@@ -982,156 +845,82 @@ SSSP_WEIGHT_MOD = 8
 #: using <= SSSP_MAX_EDGES edges" is a total semantics either way, no
 #: convergence guard needed.
 SSSP_MAX_EDGES = 8
-SSSP_ROUND_PLANS: list[str] = []
 
 
 def sssp_cost(
     edges: DataFrame,
     seed_mod: int = BFS_SEED_MOD,
     max_edges: int = SSSP_MAX_EDGES,
-) -> DataFrame:
+) -> tuple[DataFrame, list[Round]]:
     """Bounded Bellman-Ford: minimum-cost path from the nearest seed
     (nodes divisible by ``seed_mod``) using at most ``max_edges`` edges,
     over a canonical (u < v) edge set with weights 1 + (u + v) %
-    SSSP_WEIGHT_MOD.  Returns (part_id, min_cost) for reachable nodes.
+    SSSP_WEIGHT_MOD.  Returns ``(costs, trace)``: (part_id, min_cost) for
+    reachable nodes and one :class:`Round` per relaxation.
 
     This is the RELAXATION class, not BFS's frontier class: a node's
     tentative cost can IMPROVE in later rounds (a cheap many-hop path
     beats an expensive direct edge — pinned by a planted pytest), so the
-    loop state is the full tentative-cost table, re-derived and
-    checkpointed each round (superseded rounds released, the k-core
-    discipline), not an append-only union of frontiers.  Each round is
-    ONE src-keyed equi-join of the weighted symmetric edge projection
-    against the previous cost table + ONE min-combiner aggregate —
-    map-side partials collapse the per-node candidate set before the
-    shuffle, the textbook distributed Bellman-Ford superstep.  Driver
-    state is two scalars (the (row count, cost sum) convergence
-    certificate).  The loop early-exits at the observed fixpoint (see
-    SSSP_MAX_EDGES — a pure optimization; the pinned max_edges=1 budget
-    cap still runs exactly one round because the exit can only trigger
-    AFTER a completed, value-identical round).  Exact BIGINT min-plus
+    loop state is the full tentative-cost table, replaced each round.
+    Each round is ONE src-keyed equi-join of the weighted symmetric edge
+    projection against the previous cost table + ONE min-combiner
+    aggregate — map-side partials collapse the per-node candidate set
+    before the shuffle, the textbook distributed Bellman-Ford superstep.
+    The edge side is a stateless one-explode projection in the broadcast
+    regime and a src-partitioned copy, built on the first scale round,
+    in the scale regime (as in :func:`bfs_hops`).
+
+    The certificate is (row count, exact-BIGINT cost sum): each new table
+    is a node-superset of the previous one (old rows pass through the
+    min-combiner) and min-plus costs only ever DECREASE, so an unchanged
+    pair means an unchanged table.  The loop stops there — a pure
+    optimization: every skipped round is a value no-op, so the result
+    still equals the oracle's full unrolled ladder, and a max_edges=1
+    budget still runs exactly one round.  Exact BIGINT min-plus
     arithmetic (costs <= max_edges * 8), so the table value-hashes
     across engines."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _auto_broadcast_bytes,
-        partitioned_edge_checkpoint,
-        symmetrize,
-    )
-
-    SSSP_ROUND_PLANS.clear()
-    spark = edges.sparkSession
     w = (F.lit(1) + (F.col("u") + F.col("v")) % SSSP_WEIGHT_MOD).cast("bigint")
-    # symmetric weighted view as ONE explode (r18): the union form scanned
-    # the canonical checkpoint twice per consumer.  Broadcast-regime
-    # rounds are map-only over this stateless projection; the partitioned
-    # checkpoint below is built lazily, only when a round actually leaves
-    # the broadcast regime (materializing it up front costs more than it
-    # saves at driver SFs - measured +0.3 s/pass).
     sym = symmetrize(edges.select("u", "v", w.alias("w")), "u", "v", "w")
-    sym_part: DataFrame | None = None  # scale-regime representation
-    bcast_limit = _auto_broadcast_bytes(edges.sparkSession)
-    dist = (
-        # filter BEFORE the distinct (guide 2.3): the mod filter keeps
-        # ~1/seed_mod of the rows entering the aggregate
+    seeds = (
+        # filter BEFORE the distinct: the mod filter keeps ~1/seed_mod of
+        # the rows entering the aggregate
         sym.select(F.col("src").alias("node"))
         .where(F.col("node") % seed_mod == 0)
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("cost"))
         .localCheckpoint(eager=False)
     )
-    # the seed table is a checkpoint THIS function created - owned, so it
-    # is released as soon as round 1 materializes (r15 advice: the owned
-    # flag protects only the CALLER's input, and sssp's caller passes raw
-    # edges, never a checkpoint it needs back)
-    dist_owned = True
-    prev_cert = None
-    # exact cost-table row count (the seed count materializes the seed
-    # checkpoint round 1 reads anyway; afterwards it rides the convergence
-    # certificate): without the gated hint the weighted edge projection
-    # shuffle-writes by src every round for a dist join AQE converts to
-    # broadcast after the fact (guide 3.1/2.4; the k-core measurement).
-    # Above the session broadcast threshold the hint is a no-op.
-    n_dist = dist.count()
-    # Each relaxation round (weighted expand + union + min-combiner) is
-    # ONE spark.sql statement over per-round re-bound temp views (r19,
-    # guide §7.3 — the CC-round discipline, see functions/graph.
-    # _cc_round_sql): the former per-op DataFrame composition paid ~6
-    # eager analyzer passes of driver time per round; one SQL statement
-    # analyzes the identical tree once.  Join keying, regime gating, and
-    # the union+min-combiner shape are unchanged.
-    e_sym_view, e_part_view, d_view = _loop_view_names(
-        "sssp_esym", "sssp_epart", "sssp_d"
+
+    def relax(v: Views, broadcast: bool) -> str:
+        # the relax join is INLINED as the second union child rather than
+        # bound through a CTE: Union's constraint propagation
+        # (UnionBase.rewriteConstraints) crashes on a CTE-shaped child
+        # whose constraints reference the pre-alias attribute ("key not
+        # found: node#NNL" on this Spark) — the inline form plans the same
+        hint = "/*+ BROADCAST(d) */ " if broadcast else ""
+        return (
+            f"SELECT node, min(cost) AS cost FROM (\n"
+            f"  SELECT d.node, d.cost FROM {v.state} d\n"
+            f"  UNION ALL\n"
+            f"  SELECT {hint}e.dst AS node, d.cost + e.w AS cost "
+            f"FROM {v.edges} e JOIN {v.state} d ON e.src = d.node\n"
+            f") GROUP BY node"
+        )
+
+    dist, trace = superstep_loop(
+        seeds,
+        relax,
+        max_rounds=max_edges,
+        certificate=[F.sum("cost").cast("bigint")],
+        edges=sym,
+        partition_edges=True,
     )
-    sym.createOrReplaceTempView(e_sym_view)
-    try:
-        for _ in range(max_edges):
-            if n_dist * LOOP_STATE_ROW_BYTES <= bcast_limit:
-                # broadcast dist: edges never shuffle
-                e_view, h_dist = e_sym_view, "/*+ BROADCAST(d) */ "
-            else:
-                # scale regime: sort-merge against a symmetric copy
-                # checkpointed hash-partitioned + sorted by src with the
-                # partitioning preserved into the scan - built ONCE, on
-                # the first scale round; the edge side then never
-                # re-shuffles or re-sorts, only the cost table moves
-                if sym_part is None:
-                    sym_part = partitioned_edge_checkpoint(
-                        sym, "src", 2 * edges.count(), eager=False
-                    )
-                    sym_part.createOrReplaceTempView(e_part_view)
-                e_view, h_dist = e_part_view, ""
-            dist.createOrReplaceTempView(d_view)
-            # the relax join is INLINED as the second union child rather
-            # than bound through a CTE: Union's constraint propagation
-            # (UnionBase.rewriteConstraints) crashes on a CTE-shaped
-            # child whose constraints reference the pre-alias attribute
-            # ("key not found: node#NNL" on this Spark) — the inline
-            # form rewrites cleanly and plans identically
-            new_join = spark.sql(
-                f"SELECT node, min(cost) AS cost FROM (\n"
-                f"  SELECT d.node, d.cost FROM {d_view} d\n"
-                f"  UNION ALL\n"
-                f"  SELECT {h_dist}e.dst AS node, d.cost + e.w AS cost "
-                f"FROM {e_view} e JOIN {d_view} d ON e.src = d.node\n"
-                f") GROUP BY node"
-            )
-            new = new_join.localCheckpoint(eager=False)
-            # one aggregate action materializes the checkpoint AND yields
-            # the convergence certificate: `new` is a node-superset of
-            # dist by construction (dist rows pass through the
-            # min-combiner) and min-plus costs only ever DECREASE, so
-            # (row count, exact-BIGINT cost sum) is unchanged iff the
-            # table is unchanged - no compare join needed, and the early
-            # exit is a PURE optimization (every skipped round is a value
-            # no-op; the result still equals the oracle's full unrolled
-            # ladder - the BFS empty-frontier discipline; observed:
-            # fixpoint at round ~4 of 8 at driver SFs, halving the honest
-            # loop price)
-            cert = tuple(
-                new.agg(
-                    F.count(F.lit(1)), F.sum("cost").cast("bigint")
-                ).first()
-            )
-            SSSP_ROUND_PLANS.append(final_plan(new_join))
-            if dist_owned:
-                _release_checkpoint(dist)
-            dist, dist_owned = new, True
-            n_dist = int(cert[0] or 0)
-            if cert == prev_cert:
-                break
-            prev_cert = cert
-    finally:
-        # the returned cost table is the final round's own (materialized)
-        # checkpoint - the scale-regime edge checkpoint (if any round
-        # built it) is dead once the loop exits; finally so a mid-loop
-        # failure cannot strand it
-        if sym_part is not None:
-            _release_checkpoint(sym_part)
-        _drop_views(spark, e_sym_view, e_part_view, d_view)
-    return dist.select(
-        F.col("node").cast("bigint").alias("part_id"),
-        F.col("cost").alias("min_cost"),
+    return (
+        dist.select(
+            F.col("node").cast("bigint").alias("part_id"),
+            F.col("cost").cast("bigint").alias("min_cost"),
+        ),
+        trace,
     )
 
 
@@ -1202,17 +991,19 @@ def _sssp_oracle() -> str:
     fixpoint=True,
 )
 def graph_sssp_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    e = copurchase_edges(li)
-    # the returned cost table is the loop's final-round checkpoint (the
-    # seed table and every superseded round are already released inside
-    # sssp_cost), so the co-purchase checkpoint is dead once the loop
-    # exits — same per-bench-pass leak as the WCC entry (r16 advice);
-    # finally so a mid-loop failure cannot skip the release.
+    return graph_sssp_cost_run(spark, sf_dir)[0]
+
+
+def graph_sssp_cost_run(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[Round]]:
+    e = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
+    # the returned cost table is the loop's final-round checkpoint, so the
+    # co-purchase checkpoint is dead once the loop exits
     try:
         return sssp_cost(e)
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
 
 
 @query(
@@ -1243,17 +1034,20 @@ def graph_sssp_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint=True,
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    e = copurchase_edges(li)
+    return graph_bfs_hops_run(spark, sf_dir)[0]
+
+
+def graph_bfs_hops_run(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[Round]]:
+    e = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     # the returned hop table is a union of the loop's OWN checkpoints
-    # (seeds + per-hop frontiers, all materialized by the round actions),
-    # so the co-purchase checkpoint is dead once the expansion exits —
-    # same per-bench-pass leak as the WCC entry (r16 advice); finally so
-    # a mid-loop failure cannot skip the release.
+    # (seeds + frontiers), so the co-purchase checkpoint is dead once the
+    # expansion exits
     try:
         return bfs_hops(e)
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
 
 
 # ---------------------------------------------------------------------------
@@ -1358,16 +1152,16 @@ def _wcc_oracle() -> str:
     "label(label) doubles the propagation radius per round, O(log "
     "diameter) rounds); each round is one to three neighbour-min "
     "equi-join + aggregate hops (three when the labeling is broadcast-"
-    "small - r19-measured optimum: extra hops are nearly free there "
+    "small - the measured optimum: extra hops are nearly free there "
     "and cut the round count) and one label-keyed jump equi-join over the "
-    "checkpointed previous labeling, captured in CC_ROUND_PLANS for the "
-    "scale harness (broadcast-regime rounds plan with ZERO shuffle "
-    "exchanges over the src-partitioned symmetric edge checkpoint); superseded labelings are released (the k-core "
-    "discipline); driver state is one (count, label-sum) certificate "
+    "checkpointed previous labeling, recorded in the loop's per-round "
+    "trace (broadcast-regime rounds plan with ZERO shuffle exchanges over "
+    "the src-partitioned symmetric edge checkpoint); superseded labelings "
+    "are released; driver state is one (count, label-sum) certificate "
     "pair read off the SAME aggregate that materializes the round's "
     "checkpoint — labels are monotone non-increasing over a constant "
     "vertex set, so an unchanged pair IS the fixpoint, with no extra "
-    "probe join (functions/graph.py connected_components, r17).  "
+    "probe join (functions/graph.py connected_components).  "
     "Component ids are min part ids — set-unique, independent of round "
     "order — so the membership table value-hashes.  The oracle is the "
     "same closure as a DuckDB recursive CTE (the dedup_cluster_"
@@ -1377,23 +1171,36 @@ def _wcc_oracle() -> str:
     fixpoint=True,
 )
 def graph_wcc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    e = wcc_edges(li)
+    return graph_wcc_membership_run(spark, sf_dir)[0]
+
+
+def graph_wcc_membership_run(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[Round]]:
+    e = wcc_edges(load_table(spark, sf_dir, "lineitem"))
     # the returned labeling reads only its own final-round checkpoint
-    # (connected_components symmetrizes into — and releases — its own
-    # edge copy), so the windowed co-purchase checkpoint this call built
-    # is dead once the loop exits; without the release each fixpoint
-    # bench pass (plan cache defeated) retained one edge-set RDD for the
-    # session (r16 advice).  finally: the non-convergence RuntimeError
-    # must not skip it — that would re-create the leak on exactly the
-    # error path the loop itself releases its own copies on.
+    # (connected_components symmetrizes into, and releases, its own edge
+    # copy), so the windowed co-purchase checkpoint is dead once the loop
+    # exits; finally so the non-convergence RuntimeError cannot skip it
     try:
-        labels, _rounds = connected_components(
+        labels, trace = connected_components(
             e, "u", "v", max_rounds=WCC_MAX_ROUNDS
         )
     finally:
-        _release_checkpoint(e)
-    return labels.select(
+        release_checkpoint(e)
+    membership = labels.select(
         F.col("v").cast("bigint").alias("part_id"),
         F.col("component").cast("bigint").alias("component_id"),
     )
+    return membership, trace
+
+
+#: registry name -> its ``(df, trace)`` composition: plan consumers (the
+#: plan-shape tests, tools/scale_stress.py, tools/dump_plans.py) call
+#: these to read a fixpoint query's per-round trace next to its result
+FIXPOINT_RUNS = {
+    "graph_bfs_hops": graph_bfs_hops_run,
+    "graph_kcore_membership": graph_kcore_membership_run,
+    "graph_sssp_cost": graph_sssp_cost_run,
+    "graph_wcc_membership": graph_wcc_membership_run,
+}

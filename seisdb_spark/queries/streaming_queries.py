@@ -1722,7 +1722,7 @@ def streaming_wcc_membership(
     # checkpoint) — the batch twin's r16-advice release, mirrored;
     # finally so non-convergence cannot skip it
     try:
-        labels, _rounds = connected_components(
+        labels, _trace = connected_components(
             e, "u", "v", max_rounds=WCC_MAX_ROUNDS
         )
     finally:

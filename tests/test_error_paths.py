@@ -248,3 +248,21 @@ def test_release_checkpoint_deregisters_session_list(spark):
         f"session checkpoint list grew {n_after_first} -> {n_after_second} "
         "across fixpoint bench passes (dead refs accumulating)"
     )
+
+
+@pytest.mark.parametrize(
+    "text, n_shingles",
+    [("one", 0), ("one two", 0), ("", 0), (None, 0), ("a b c d", 2)],
+)
+def test_shingle_tokens_short_and_null_documents(spark, text, n_shingles):
+    """Documents shorter than k=3 words and null text yield no shingle
+    rows — and must not raise: the k-shingle index range counts down for
+    them, and an out-of-range subscript raises INVALID_ARRAY_INDEX under
+    Spark 4's default ANSI mode."""
+    from seisdb_spark.functions.text import shingle_tokens
+
+    docs = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
+    got = [r.sh for r in shingle_tokens(docs).collect()]
+    assert len(got) == n_shingles, got
+    if n_shingles:
+        assert sorted(got) == ["a b c", "b c d"]

@@ -5,7 +5,12 @@ driver query's closure over real LSH-verified pairs."""
 
 from __future__ import annotations
 
+import contextlib
+import random
+import re
+
 import numpy as np
+import pytest
 
 from seisdb_spark.functions.graph import cc_auto, cc_exact_lazy, connected_components
 from seisdb_spark.queries.registry import REGISTRY
@@ -61,10 +66,10 @@ def test_cc_random_components_match_union_find(spark):
     }
     assert got_lazy == truth
 
-    labels, rounds = connected_components(_pairs_df(spark, pairs), "doc_a", "doc_b")
+    labels, trace = connected_components(_pairs_df(spark, pairs), "doc_a", "doc_b")
     got_iter = {r.v: r.component for r in labels.collect()}
     assert got_iter == truth
-    assert rounds <= 6
+    assert len(trace) <= 6
 
 
 def test_cc_long_chain_pointer_jump_radius(spark):
@@ -79,9 +84,9 @@ def test_cc_long_chain_pointer_jump_radius(spark):
     }
     assert got_lazy == truth
 
-    labels, rounds = connected_components(_pairs_df(spark, pairs), "doc_a", "doc_b")
+    labels, trace = connected_components(_pairs_df(spark, pairs), "doc_a", "doc_b")
     assert {r.v: r.component for r in labels.collect()} == truth
-    assert rounds <= 9, f"pointer jumping took {rounds} rounds for diameter 39"
+    assert len(trace) <= 9, f"pointer jumping took {len(trace)} rounds for diameter 39"
 
 
 def test_cc_lazy_builds_without_jobs(spark):
@@ -101,10 +106,10 @@ def test_distributed_cc_agrees_with_lazy_on_real_pairs(spark):
     synthetic tests cover shapes; this covers the production input)."""
     pairs = REGISTRY["dedup_jaccard_pairs"].spark(spark, SF_DIR)
     lazy = {r.v: r.component for r in cc_exact_lazy(pairs).collect()}
-    labels, rounds = connected_components(pairs, "doc_a", "doc_b")
+    labels, trace = connected_components(pairs, "doc_a", "doc_b")
     dist = {r.v: r.component for r in labels.collect()}
     assert dist == lazy
-    assert rounds <= 6  # real dup clusters are shallow
+    assert len(trace) <= 6  # real dup clusters are shallow
 
 
 def test_distributed_cc_handles_asymmetric_input(spark):
@@ -219,8 +224,9 @@ def test_release_checkpoint_drops_superseded_round_blocks(spark):
 
     # a 60-node chain: diameter 59 forces >= 5 pointer-jump rounds
     pairs = _pairs_df(spark, [(i, i + 1) for i in range(59)])
-    labels, rounds = connected_components(pairs, "doc_a", "doc_b")
+    labels, trace = connected_components(pairs, "doc_a", "doc_b")
     labels.collect()
+    rounds = len(trace)
 
     after = jsc.getPersistentRDDs().size()
     assert rounds >= 5
@@ -311,7 +317,7 @@ def test_cc_certificate_overflow_precondition_guard(spark):
     # just UNDER the bound still runs: 2 vertices, max id < 2^62 each —
     # 2 * (2^61 + 1) < 2^63, so the certificate is certified sound
     ok = _pairs_df(spark, [(2**61, 2**61 + 1)])
-    labels, rounds = connected_components(ok, "doc_a", "doc_b")
+    labels, _ = connected_components(ok, "doc_a", "doc_b")
     got = {r.v: r.component for r in labels.collect()}
     assert got == {2**61: 2**61, 2**61 + 1: 2**61}
 
@@ -338,54 +344,117 @@ def test_auto_broadcast_bytes_parses_spark_size_spellings(spark):
         spark.conf.set(key, old)
 
 
-def test_hint_broadcast_if_small_gates_on_known_row_count(spark):
-    """r18 optimization pin: loop round state scans as LogicalRDD with
-    unknown stats, so the loops hint broadcast from their EXACT known row
-    counts — below the session threshold the side is hinted, above it (the
-    100 TB regime) the input must come back unchanged so the round keeps
-    the shuffle join AQE skew-handles."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _auto_broadcast_bytes,
-        hint_broadcast_if_small,
-    )
+def test_superstep_gate_sizes_against_broadcast_threshold(spark):
+    """The loop regime gate: loop state is a checkpoint with UNKNOWN
+    stats, so the planner cannot choose a broadcast join for it, but the
+    loop knows the state's exact row count.  A round is broadcast-regime
+    exactly when rows * LOOP_STATE_ROW_BYTES fits the session's
+    autoBroadcastJoinThreshold — at the boundary it broadcasts, one byte
+    under it takes the scale regime (the 100 TB path, whose shuffle joins
+    AQE skew-handles) — and both regimes give the same labeling."""
+    from seisdb_spark.functions.graph import LOOP_STATE_ROW_BYTES
 
-    df = _pairs_df(spark, [(1, 2)])
-    limit_rows = _auto_broadcast_bytes(spark) // LOOP_STATE_ROW_BYTES
+    pairs = [(i, i + 1) for i in range(10)]  # 11 vertices: the state rows
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for limit, regime in (
+            (11 * LOOP_STATE_ROW_BYTES, "broadcast"),
+            (11 * LOOP_STATE_ROW_BYTES - 1, "scale"),
+        ):
+            spark.conf.set(key, str(limit))
+            labels, trace = connected_components(
+                _pairs_df(spark, pairs), "doc_a", "doc_b"
+            )
+            got = {r.v: r.component for r in labels.collect()}
+            assert got == _truth_min_labels(pairs), regime
+            assert {r.regime for r in trace} == {regime}, limit
+    finally:
+        spark.conf.set(key, old)
 
-    hinted = hint_broadcast_if_small(df, limit_rows)
-    assert "UnresolvedHint" in hinted._jdf.queryExecution().logical().toString() or (
-        "broadcast" in hinted._jdf.queryExecution().analyzed().toString().lower()
-    ), "small side was not hinted"
 
-    too_big = hint_broadcast_if_small(df, limit_rows + 1)
-    assert too_big is df, "oversized side must pass through unchanged"
-    assert hint_broadcast_if_small(df, None) is df, "unknown count: no hint"
+#: an Exchange, or a Sort on src, directly (or one operator) above the
+#: edge-side checkpoint scan: the edge side re-clustered inside a round
+_EDGE_SIDE_SHUFFLE = re.compile(
+    r"(Exchange hashpartitioning|Sort \[src)[^\n]*\n"
+    r"(?:[^\n]*\n)?[^\n]*Scan ExistingRDD\[src#"
+)
+
+
+@contextlib.contextmanager
+def _multi_partition_loops(spark, broadcast_threshold=None):
+    """Loop settings for the per-round plan pins: the edge checkpoint gets
+    several partitions (a real corpus is never one partition — with
+    exactly one, EnsureRequirements declines co-partitioning and
+    re-shuffles both sides, a degenerate tiny-graph case), and optionally
+    a broadcast threshold override (``"0"`` forces the scale regime)."""
+    import seisdb_spark.functions.graph as G
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old, old_rows_per_task = spark.conf.get(key), G.EDGE_ROWS_PER_TASK
+    G.EDGE_ROWS_PER_TASK = 16
+    if broadcast_threshold is not None:
+        spark.conf.set(key, broadcast_threshold)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+        G.EDGE_ROWS_PER_TASK = old_rows_per_task
+
+
+def _pin_graph(spark):
+    """Canonical (u < v) edges: a 200-node random graph of degree ~8 plus
+    a 30-node tail — a multi-round k-core peel (k=5), BFS and SSSP
+    cascade from the seeds divisible by 50."""
+    rng = random.Random(1)
+    edges = set()
+    for i in range(200):
+        for j in rng.sample(range(200), 4):
+            if i != j:
+                edges.add((min(i, j), max(i, j)))
+    edges.update((i, i + 1) for i in range(200, 230))
+    return spark.createDataFrame(sorted(edges), "u bigint, v bigint")
+
+
+def _run_loop(spark, loop):
+    from seisdb_spark.queries import graph_queries as gq
+
+    edges = _pin_graph(spark)
+    df, trace = {
+        "cc": lambda: connected_components(edges, "u", "v"),
+        "kcore": lambda: gq.kcore_core(edges, k=5, max_peels=20),
+        "bfs": lambda: gq.bfs_hops(edges, seed_mod=50, max_hops=6),
+        "sssp": lambda: gq.sssp_cost(edges, seed_mod=50, max_edges=8),
+    }[loop]()
+    return sorted(tuple(r) for r in df.collect()), trace
 
 
 def test_cc_round_is_exchange_free_under_broadcast_gate(spark):
-    """r18 optimization pin (guide §3.1/§2.4): in the broadcast regime
-    (labeling's exact count under the session threshold) every captured
-    propagation round executes with ZERO shuffle exchanges — the
-    neighbour-min joins broadcast the labeling, and its aggregate groups
-    by ``src``, the symmetric edge checkpoint's PRESERVED partitioning
-    key (partitioned_edge_checkpoint builds it AQE-off so the LogicalRDD
-    keeps hashpartitioning(src)), so even the aggregate needs no
-    exchange.  nb's broadcast is still reused across both m1 references.
-    Before the gate, checkpoint scans' unknown stats forced SMJ plans
-    whose edge-side exchanges AQE materialized before converting (the
-    measured ~70% of round cost at sf0.1)."""
-    from seisdb_spark.functions.graph import CC_ROUND_PLANS
+    """In the broadcast regime (labeling's exact count under the session
+    threshold) every propagation round executes with ZERO shuffle
+    exchanges — the neighbour-min joins broadcast the labeling, and its
+    aggregate groups by ``src``, the symmetric edge checkpoint's
+    PRESERVED partitioning key (partitioned_edge_checkpoint builds it
+    AQE-off so the LogicalRDD keeps hashpartitioning(src)), so even the
+    aggregate needs no exchange.  nb's broadcast is still reused across
+    both m1 references.  Without the gate, checkpoint scans' unknown
+    stats force SMJ plans whose edge-side exchanges AQE materializes
+    before converting."""
     from seisdb_spark.plancheck import count_exchanges, has_node
 
     # a 60-node chain: multi-round cascade, tiny labeling -> gate hints
     pairs = [(i, i + 1) for i in range(60)]
-    labels, rounds = connected_components(_pairs_df(spark, pairs), "doc_a", "doc_b")
-    got = {r.v: r.component for r in labels.collect()}
+    with _multi_partition_loops(spark):
+        labels, trace = connected_components(
+            _pairs_df(spark, pairs), "doc_a", "doc_b"
+        )
+        got = {r.v: r.component for r in labels.collect()}
     assert got == _truth_min_labels(pairs)
-    assert rounds >= 2  # two-hop rounds: ceil of the one-hop cascade / 2
-    assert len(CC_ROUND_PLANS) == rounds
-    for p in CC_ROUND_PLANS:
+    assert len(trace) >= 2  # three-hop rounds: ceil of the one-hop cascade / 3
+    assert [r.round for r in trace] == list(range(1, len(trace) + 1))
+    for r in trace:
+        p = r.plan
+        assert r.regime == "broadcast"
         assert count_exchanges(p) == 0, (
             f"round plan has {count_exchanges(p)} shuffle exchanges — the "
             f"broadcast-regime round regressed:\n{p[:800]}"
@@ -400,55 +469,88 @@ def test_cc_scale_regime_round_keys_the_join_on_the_partition_key(spark):
     must key its neighbour-min join on ``src`` — the edge checkpoint's
     preserved clustering+ordering — so the per-round sort-merge join
     never re-shuffles or re-sorts the EDGE side; only the labeling moves.
-    Pinned by plan shape: the captured round has no exchange whose
-    partitioning leads with the edge table's join column (src exchanges
-    would be edge-side), while labeling-side exchanges are allowed.  Both
-    regimes must produce the identical labeling."""
-    from seisdb_spark.functions.graph import CC_ROUND_PLANS
-
+    Pinned by plan shape: no captured round has an exchange or src sort
+    directly over the edge table's scan, while labeling-side exchanges
+    are allowed.  Both regimes must produce the identical labeling."""
     pairs = [(i, i + 1) for i in range(60)]
-    labels_b, rounds_b = connected_components(
+    labels_b, trace_b = connected_components(
         _pairs_df(spark, pairs), "doc_a", "doc_b"
     )
     got_b = {r.v: r.component for r in labels_b.collect()}
 
-    # force the scale regime by shrinking the broadcast threshold to 0,
-    # and give the edge checkpoint a REALISTIC partition count (a scale
-    # corpus is never 1 partition; with exactly 1, EnsureRequirements
-    # declines the co-partitioning and re-shuffles both sides — the
-    # degenerate tiny-graph-at-scale-regime combination that only a
-    # forced-threshold test produces)
-    import seisdb_spark.functions.graph as G
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_rows_per_task = G.EDGE_ROWS_PER_TASK
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "0")
-    G.EDGE_ROWS_PER_TASK = 16
-    try:
-        labels_s, rounds_s = connected_components(
+    with _multi_partition_loops(spark, broadcast_threshold="0"):
+        labels_s, trace_s = connected_components(
             _pairs_df(spark, pairs), "doc_a", "doc_b"
         )
         got_s = {r.v: r.component for r in labels_s.collect()}
-        scale_plans = list(CC_ROUND_PLANS)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        G.EDGE_ROWS_PER_TASK = old_rows_per_task
+        scale_plans = [r.plan for r in trace_s]
 
     assert got_s == got_b == _truth_min_labels(pairs)
-    # one-hop scale rounds need more rounds than two-hop broadcast rounds
-    assert rounds_s >= rounds_b
-    import re
-
+    # one-hop scale rounds need more rounds than three-hop broadcast rounds
+    assert len(trace_s) >= len(trace_b)
+    assert {r.regime for r in trace_s} == {"scale"}
     for p in scale_plans:
-        # the edge scan must feed its join directly: no Exchange (or Sort)
-        # re-clusters the checkpointed edge side — its preserved
+        # the edge scan must feed its join directly: its preserved
         # hashpartitioning(src) + sort order satisfy the SMJ requirement.
         # The labeling side (Scan ExistingRDD[v,l]) may shuffle freely.
-        for mm in re.finditer(
-            r"(Exchange hashpartitioning|Sort \[src)[^\n]*\n"
-            r"(?:[^\n]*\n)?[^\n]*Scan ExistingRDD\[src#",
-            p,
-        ):
-            raise AssertionError(
-                f"edge-side exchange/sort re-appeared:\n...{mm.group(0)}..."
-            )
+        mm = _EDGE_SIDE_SHUFFLE.search(p)
+        assert mm is None, f"edge-side exchange/sort re-appeared:\n...{mm.group(0)}..."
+
+
+#: (min, max) shuffle exchanges per broadcast-regime round, per loop
+_BROADCAST_ROUND_EXCHANGES = {
+    "cc": (0, 0),
+    # the peel's degree aggregate reads the survivor rows' preserved src
+    # partitioning in EVERY round, not only the first (a re-bound
+    # survivor checkpoint used to lose it)
+    "kcore": (0, 0),
+    # the dst distinct; a round over an empty frontier collapses to an
+    # empty relation with none
+    "bfs": (0, 1),
+    # the min-combiner aggregate
+    "sssp": (1, 1),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_BROADCAST_ROUND_EXCHANGES))
+def test_loop_round_exchanges_under_broadcast_gate(spark, loop):
+    """Per-round shuffle-exchange pins for the four fixpoint loops in the
+    broadcast regime, over a multi-partition edge checkpoint and a
+    cascade of several rounds (so re-bound round state is covered)."""
+    from seisdb_spark.plancheck import count_exchanges
+
+    with _multi_partition_loops(spark):
+        _, trace = _run_loop(spark, loop)
+    counts = [count_exchanges(r.plan) for r in trace]
+    lo, hi = _BROADCAST_ROUND_EXCHANGES[loop]
+    assert len(trace) >= 3, f"{loop}: cascade too short to pin: {counts}"
+    assert {r.regime for r in trace} == {"broadcast"}
+    assert all(lo <= n <= hi for n in counts), f"{loop} exchanges per round: {counts}"
+
+
+@pytest.mark.parametrize("loop", ["kcore", "bfs", "sssp"])
+def test_loop_scale_regime_keeps_the_edge_side_unshuffled(spark, loop):
+    """Scale regime (autoBroadcastJoinThreshold=0): the result equals the
+    broadcast regime's, and the edge side moves only where the algorithm
+    needs it to.  BFS and SSSP join the src-partitioned edge checkpoint
+    with no exchange or sort on the edge-side scan — only the round state
+    moves.  k-core's state IS its edge set, and a non-broadcast keep set
+    needs the rows re-keyed by dst: exactly one dst exchange of the rows
+    per peel, and none on src."""
+    from seisdb_spark.plancheck import count_exchanges
+
+    want, _ = _run_loop(spark, loop)
+    with _multi_partition_loops(spark, broadcast_threshold="0"):
+        got, trace = _run_loop(spark, loop)
+    assert got == want
+    assert {r.regime for r in trace} == {"scale"}
+    for r in trace:
+        p = r.plan
+        if loop == "kcore":
+            assert count_exchanges(p, key="dst") == 1, p[:1500]
+            assert count_exchanges(p, key="src") <= 1, p[:1500]  # keep partials
+            continue
+        mm = _EDGE_SIDE_SHUFFLE.search(p)
+        assert mm is None, (
+            f"{loop} round {r.round}: edge-side exchange/sort:\n...{mm.group(0)}..."
+        )

@@ -24,6 +24,7 @@ import pytest
 
 from seisdb_spark.plancheck import final_plan
 from seisdb_spark.queries import REGISTRY
+from seisdb_spark.queries.graph_queries import FIXPOINT_RUNS, round_plans_ok
 from tests.conftest import SF_DIR
 from tools.scale_stress import DIR_OVERRIDE, OUTPUT_UNBOUNDED, STRESS_QUERIES
 
@@ -34,14 +35,14 @@ CHECKED = sorted(
 
 @pytest.mark.parametrize("name", CHECKED)
 def test_stress_plan_predicate_holds_at_gate_sf(spark, name):
-    spec = REGISTRY[name]
-    if spec.fixpoint:
-        # driver-loop queries capture their per-round superstep plans as
-        # a side effect of the loop, which runs at plan build — defeat
-        # the plan cache so the round plans the predicate inspects are
-        # from THIS corpus, not whichever invocation cached the plan
-        spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, SF_DIR), None)
-    df = spec.spark(spark, SF_DIR)
+    trace = None
+    if name in FIXPOINT_RUNS:
+        # a driver-loop query's supersteps run at plan build behind
+        # checkpoint boundaries, so its final plan cannot show them: its
+        # (df, trace) composition returns the per-round plans as well
+        df, trace = FIXPOINT_RUNS[name](spark, SF_DIR)
+    else:
+        df = REGISTRY[name].spark(spark, SF_DIR)
     if name in OUTPUT_UNBOUNDED:
         # corpus-scaled outputs stay executor-side (SF_DIR is
         # env-overridable — a collect() here re-creates the harness-OOM
@@ -54,3 +55,7 @@ def test_stress_plan_predicate_holds_at_gate_sf(spark, name):
         f"{name}: scale-harness plan predicate failed at {SF_DIR} — "
         "the executed plan no longer has the certified 100TB shape"
     )
+    if trace is not None:
+        assert round_plans_ok(trace), (
+            f"{name}: a superstep's executed plan lost the certified shape"
+        )

@@ -597,17 +597,17 @@ def test_kcore_planted_cascade(spark):
     )
     got = {
         int(r.part_id): int(r.core_degree)
-        for r in kcore_core(edges, k=2, max_peels=10).collect()
+        for r in kcore_core(edges, k=2, max_peels=10)[0].collect()
     }
     assert got == {1: 2, 2: 2, 3: 2}
 
     # the cascade needs 3 peel rounds (12 -> 11 -> 10); a 1-round budget
     # must fail LOUDLY, never return the mid-cascade state
     with pytest.raises(RuntimeError, match="did not converge"):
-        kcore_core(edges, k=2, max_peels=1).collect()
+        kcore_core(edges, k=2, max_peels=1)[0].collect()
 
     # k above the max degree: the core is empty, with the right schema
-    empty = kcore_core(edges, k=10, max_peels=10)
+    empty = kcore_core(edges, k=10, max_peels=10)[0]
     assert empty.count() == 0
     assert empty.columns == ["part_id", "core_degree"]
 
@@ -648,7 +648,7 @@ def test_kcore_matches_brute_force_on_random_graphs(spark):
         for k in (2, 4, 6):
             got = {
                 int(r.part_id): int(r.core_degree)
-                for r in kcore_core(edges, k=k, max_peels=30).collect()
+                for r in kcore_core(edges, k=k, max_peels=30)[0].collect()
             }
             assert got == brute_kcore(edge_set, k), f"seed={seed} k={k}"
 
@@ -668,19 +668,19 @@ def test_bfs_planted_path_and_unreachable_component(spark):
     )
     got = {
         int(r.part_id): int(r.hops)
-        for r in bfs_hops(edges, seed_mod=100, max_hops=10).collect()
+        for r in bfs_hops(edges, seed_mod=100, max_hops=10)[0].collect()
     }
     assert got == {100: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 5}
 
     # cap below the path length: nodes beyond the cap are EXCLUDED
     capped = {
         int(r.part_id): int(r.hops)
-        for r in bfs_hops(edges, seed_mod=100, max_hops=2).collect()
+        for r in bfs_hops(edges, seed_mod=100, max_hops=2)[0].collect()
     }
     assert capped == {100: 0, 1: 1, 2: 2}
 
     # no seeds at all: empty result with the right schema
-    empty = bfs_hops(edges, seed_mod=10**9, max_hops=3)
+    empty = bfs_hops(edges, seed_mod=10**9, max_hops=3)[0]
     assert empty.count() == 0
     assert empty.columns == ["part_id", "hops"]
 
@@ -728,7 +728,7 @@ def test_bfs_nearest_seed_on_multi_seed_graphs(spark):
         for mod in (5, 7):
             got = {
                 int(r.part_id): int(r.hops)
-                for r in bfs_hops(edges, seed_mod=mod, max_hops=6).collect()
+                for r in bfs_hops(edges, seed_mod=mod, max_hops=6)[0].collect()
             }
             assert got == brute_bfs(edge_set, mod, 6), f"seed={seed} mod={mod}"
 
@@ -762,12 +762,12 @@ def test_bfs_replica_invariant(spark):
 
     base = {
         int(r.part_id): int(r.hops)
-        for r in bfs_hops(copurchase_edges(li)).collect()
+        for r in bfs_hops(copurchase_edges(li))[0].collect()
     }
     want = {pid + r * off: h for r in range(3) for pid, h in base.items()}
     got = {
         int(r.part_id): int(r.hops)
-        for r in bfs_hops(copurchase_edges(li3)).collect()
+        for r in bfs_hops(copurchase_edges(li3))[0].collect()
     }
     assert got == want
 
@@ -785,7 +785,7 @@ def test_sssp_cost_beats_hops_on_planted_triangle(spark):
     )
     got = {
         int(r.part_id): int(r.min_cost)
-        for r in sssp_cost(edges, seed_mod=3, max_edges=4).collect()
+        for r in sssp_cost(edges, seed_mod=3, max_edges=4)[0].collect()
     }
     # w(3,5) = 1 + 8%8 = 1; w(5,11) = 1 + 16%8 = 1; w(3,11) = 1 + 14%8 = 7
     assert got == {3: 0, 5: 1, 11: 2}
@@ -794,7 +794,7 @@ def test_sssp_cost_beats_hops_on_planted_triangle(spark):
     # so the direct edge's cost 7 stands — pins the <= max_edges cap
     capped = {
         int(r.part_id): int(r.min_cost)
-        for r in sssp_cost(edges, seed_mod=3, max_edges=1).collect()
+        for r in sssp_cost(edges, seed_mod=3, max_edges=1)[0].collect()
     }
     assert capped == {3: 0, 5: 1, 11: 7}
 
@@ -834,7 +834,7 @@ def test_sssp_matches_brute_force_on_random_graphs(spark):
         for mod in (5, 7):
             got = {
                 int(r.part_id): int(r.min_cost)
-                for r in sssp_cost(edges, seed_mod=mod, max_edges=6).collect()
+                for r in sssp_cost(edges, seed_mod=mod, max_edges=6)[0].collect()
             }
             assert got == brute(edge_set, mod, 6), f"seed={seed} mod={mod}"
 
@@ -869,12 +869,12 @@ def test_sssp_replica_invariant(spark):
 
     base = {
         int(r.part_id): int(r.min_cost)
-        for r in sssp_cost(copurchase_edges(li)).collect()
+        for r in sssp_cost(copurchase_edges(li))[0].collect()
     }
     want = {pid + r * off: c for r in range(3) for pid, c in base.items()}
     got = {
         int(r.part_id): int(r.min_cost)
-        for r in sssp_cost(copurchase_edges(li3)).collect()
+        for r in sssp_cost(copurchase_edges(li3))[0].collect()
     }
     assert got == want
 
@@ -888,15 +888,11 @@ def test_sssp_early_exit_engages_and_preserves_values(spark):
     the loop must run at least 7 rounds and still produce the exact
     per-hop prefix sums."""
     from seisdb_spark.queries import graph_queries as gq
-    from seisdb_spark.queries.registry import REGISTRY
     from tests.conftest import SF_DIR
 
-    spark.__dict__.get("_seisdb_plan_cache", {}).pop(
-        ("graph_sssp_cost", SF_DIR), None
-    )
-    REGISTRY["graph_sssp_cost"].spark(spark, SF_DIR)
-    assert 0 < len(gq.SSSP_ROUND_PLANS) < gq.SSSP_MAX_EDGES, (
-        f"early exit did not engage: {len(gq.SSSP_ROUND_PLANS)} rounds"
+    _, trace = gq.graph_sssp_cost_run(spark, SF_DIR)
+    assert 0 < len(trace) < gq.SSSP_MAX_EDGES, (
+        f"early exit did not engage: {len(trace)} rounds"
     )
 
     # path 0-1-2-...-7, seed node 0 (seed_mod large so only 0 qualifies);
@@ -905,14 +901,12 @@ def test_sssp_early_exit_engages_and_preserves_values(spark):
     edges = spark.createDataFrame(
         [{"u": i, "v": i + 1} for i in range(7)], "u bigint, v bigint"
     )
-    got = {
-        int(r.part_id): int(r.min_cost)
-        for r in gq.sssp_cost(edges, seed_mod=1000, max_edges=8).collect()
-    }
+    costs, trace = gq.sssp_cost(edges, seed_mod=1000, max_edges=8)
+    got = {int(r.part_id): int(r.min_cost) for r in costs.collect()}
     w = lambda a, b: 1 + (a + b) % gq.SSSP_WEIGHT_MOD
     want, c = {0: 0}, 0
     for i in range(7):
         c += w(i, i + 1)
         want[i + 1] = c
     assert got == want
-    assert len(gq.SSSP_ROUND_PLANS) >= 7  # no exit before the true fixpoint
+    assert len(trace) >= 7  # no exit before the true fixpoint

@@ -6,10 +6,10 @@ plan claim in OPTIMIZATION_r{N}.md is checked against committed
 ``plans/r{N}/<query>_{before,after}.txt`` files.  For driver-loop fixpoint
 queries the returned DataFrame's plan shows only the final aggregate over
 the last checkpointed iterate — the supersteps execute behind
-localCheckpoint boundaries at plan build — so this tool additionally
-appends the captured per-round executed plans (``*_ROUND_PLANS``) when the
-query family exposes them; building the plan runs the loop once, which is
-exactly what populates those lists.
+localCheckpoint boundaries at plan build — so for those queries this tool
+builds the plan through the query's ``(df, trace)`` composition
+(``graph_queries.FIXPOINT_RUNS``) and appends each traced round's executed
+plan.
 
 Usage:
     python tools/dump_plans.py before [query ...]      # default: bench set
@@ -27,15 +27,6 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: query -> (module attr holding that loop's captured round plans)
-ROUND_PLAN_SOURCES = {
-    "graph_kcore_membership": "KCORE_ROUND_PLANS",
-    "graph_bfs_hops": "BFS_ROUND_PLANS",
-    "graph_sssp_cost": "SSSP_ROUND_PLANS",
-    "graph_wcc_membership": "CC_ROUND_PLANS",
-}
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("tag", choices=["before", "after"])
@@ -47,7 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from seisdb_spark.queries import REGISTRY
-    from seisdb_spark.queries import graph_queries
+    from seisdb_spark.queries.graph_queries import FIXPOINT_RUNS
     from seisdb_spark.session import get_spark
 
     names = args.names or [n for n, s in REGISTRY.items() if s.bench]
@@ -57,23 +48,25 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in sorted(names):
-        spec = REGISTRY[name]
-        # bypass the plan cache so a prior invocation in this process can't
-        # hand back a stale plan (and so fixpoint loops re-run, repopulating
-        # their round-plan lists for the capture below)
-        spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, args.sf_dir), None)
-        df = spec.spark(spark, args.sf_dir)
+        trace = None
+        if name in FIXPOINT_RUNS:
+            df, trace = FIXPOINT_RUNS[name](spark, args.sf_dir)
+        else:
+            # bypass the plan cache so a prior invocation in this process
+            # can't hand back a stale plan
+            spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, args.sf_dir), None)
+            df = REGISTRY[name].spark(spark, args.sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         out = [f"== {name} [{args.tag}] sf_dir={args.sf_dir} ==\n", buf.getvalue()]
-        attr = ROUND_PLAN_SOURCES.get(name)
-        if attr:
-            plans = getattr(graph_queries, attr)
-            out.append(f"\n== captured per-round executed plans ({attr}, "
-                       f"{len(plans)} rounds) ==\n")
-            for i, p in enumerate(plans, 1):
-                out.append(f"\n-- round {i} --\n{p}\n")
+        if trace is not None:
+            out.append(f"\n== per-round executed plans ({len(trace)} rounds) ==\n")
+            for r in trace:
+                out.append(
+                    f"\n-- round {r.round} [{r.regime}, {r.rows} rows, "
+                    f"{r.seconds:.3f} s] --\n{r.plan}\n"
+                )
         path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as fh:
             fh.write("".join(out))

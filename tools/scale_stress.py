@@ -50,19 +50,15 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from seisdb_spark.plancheck import count_exchanges, final_plan, has_node  # noqa: E402
 from seisdb_spark.queries import REGISTRY  # noqa: E402
+from seisdb_spark.queries.graph_queries import (  # noqa: E402
+    FIXPOINT_RUNS,
+    round_plans_ok,
+)
 from seisdb_spark.sources.tables import load_table  # noqa: E402
 
 SRC_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ID_OFFSET = 10**7  # multiple of DECON_BENCH_MOD: holdout fraction preserved
 
-
-def _graph_round_plans_ok(attr: str) -> bool:
-    """Assert graph_queries' captured driver-loop round plans (the peel /
-    frontier supersteps run behind localCheckpoint boundaries at plan
-    build — the final plan the harness sees cannot show them)."""
-    from seisdb_spark.queries import graph_queries
-
-    return graph_queries.round_plans_ok(getattr(graph_queries, attr))
 
 #: The stress set: the heaviest composed pipelines + the two round-6 ops.
 #: Each entry: name -> plan predicate (applied at BOTH scales).
@@ -485,24 +481,22 @@ STRESS_QUERIES = {
     ),
     # k-core peeling: the FINAL membership plan is one aggregate over the
     # last checkpointed survivor set (never a cartesian / global sort /
-    # Python boundary), and — because the peel rounds execute behind
-    # localCheckpoint boundaries at plan build — the predicate also
-    # asserts over the captured per-round plans: every peel superstep is
-    # equi-join-only, partition-local, JVM-side, and reads its
-    # predecessor through a checkpoint scan instead of re-running the
-    # loop history (graph_queries.KCORE_ROUND_PLANS, populated by the
-    # run the harness just timed; time_query defeats the plan cache for
-    # fixpoint specs, so the plans are from THIS corpus).  Runs on the
-    # graphscale corpus like the other graph-structure operators.
+    # Python boundary).  The peel rounds execute behind localCheckpoint
+    # boundaries at plan build, so for the four fixpoint queries
+    # (graph_queries.FIXPOINT_RUNS) the harness also asserts
+    # graph_queries.round_plans_ok over the trace of the run it just
+    # timed: every superstep is equi-join-only, partition-local,
+    # JVM-side, and reads its predecessor through a checkpoint scan
+    # instead of re-running the loop history.  Runs on the graphscale
+    # corpus like the other graph-structure operators.
     "graph_kcore_membership": lambda p: (
         not has_node(p, "CartesianProduct")
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("KCORE_ROUND_PLANS")
     ),
     # multi-source BFS: same driver-loop discipline — the final hop-table
-    # plan is a union of checkpointed frontier scans, and every captured
+    # plan is a union of checkpointed frontier scans, and every traced
     # frontier-expansion round is an equi-join superstep (no cartesian /
     # nested-loop / global sort / Python) over checkpointed inputs.
     "graph_bfs_hops": lambda p: (
@@ -510,29 +504,26 @@ STRESS_QUERIES = {
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("BFS_ROUND_PLANS")
     ),
     # bounded Bellman-Ford: every relaxation round ONE src-keyed
     # equi-join + ONE min-combiner aggregate over the checkpointed cost
-    # table — same captured-round-plan discipline as k-core/BFS.
+    # table — same traced-round discipline as k-core/BFS.
     "graph_sssp_cost": lambda p: (
         not has_node(p, "CartesianProduct")
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("SSSP_ROUND_PLANS")
     ),
     # distributed pointer-jumping WCC (the 100 TB dedup-clustering form,
     # functions/graph.py connected_components): every propagation round is
     # a dst-keyed neighbour-min equi-join + aggregate and a label-keyed
-    # pointer-jump equi-join over checkpointed inputs — same captured-
-    # round-plan discipline as k-core/BFS/SSSP.
+    # pointer-jump equi-join over checkpointed inputs — same traced-round
+    # discipline as k-core/BFS/SSSP.
     "graph_wcc_membership": lambda p: (
         not has_node(p, "CartesianProduct")
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("CC_ROUND_PLANS")
     ),
     # TWAP: ONE (user, day)-keyed exchange shared by the lead() window
     # and the aggregate — never a join, never a global sort
@@ -866,8 +857,10 @@ def time_query(
     n: int = 3,
     warmup: bool = True,
 ):
-    """Median wall time over n warm runs (one untimed warm-up) + the
-    AQE-final executed plan of the last run.
+    """Median wall time over n warm runs (one untimed warm-up), the
+    AQE-final executed plan of the last run, and — for the fixpoint
+    queries (``graph_queries.FIXPOINT_RUNS``) — that run's per-round
+    trace (None otherwise).
 
     Each timed run EVICTS the registry's per-(name, sf_dir) plan cache and
     rebuilds the DataFrame: re-collecting the SAME DataFrame object lets
@@ -879,8 +872,15 @@ def time_query(
     comes warm from Spark's codegen cache (same source), which is the
     warm-executor steady state the scaling claim is about."""
     spec = REGISTRY[name]
+    loop_run = FIXPOINT_RUNS.get(name)
+    trace = None
 
     def fresh() -> "DataFrame":
+        nonlocal trace
+        if loop_run is not None:
+            # the (df, trace) composition bypasses the plan cache
+            df, trace = loop_run(spark, sf_dir)
+            return df
         spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, sf_dir), None)
         return spec.spark(spark, sf_dir)
 
@@ -920,16 +920,16 @@ def time_query(
     # recorded number is then a COLD pass, stated in the tier notes.
     times, df = [], None
     for _ in range(n):
-        df = None  # drop the prior pass's Dataset BEFORE the GC, or its
-        # ShuffleDependency is still strongly reachable via py4j and the
-        # collection frees only the pass-before-last's files
+        df = trace = None  # drop the prior pass's Datasets BEFORE the GC,
+        # or their ShuffleDependencies are still strongly reachable via
+        # py4j and the collection frees only the pass-before-last's files
         reclaim_shuffle_disk()
         if spec.fixpoint:
             # driver-loop queries (k-core peel, BFS frontier) iterate at
             # PLAN BUILD — timing only run(df) would price the final
-            # aggregate (~70x under k-core's honest cost, the r14
-            # headline caveat); fresh() defeats the plan cache, so
-            # putting it inside the timed region prices the loop too
+            # aggregate (~70x under k-core's honest cost); fresh()
+            # rebuilds the loop, so putting it inside the timed region
+            # prices the loop too
             t0 = time.time()
             df = fresh()
             run(df)
@@ -938,7 +938,7 @@ def time_query(
             t0 = time.time()
             run(df)
         times.append(time.time() - t0)
-    return statistics.median(times), final_plan(df)
+    return statistics.median(times), final_plan(df), trace
 
 
 def main() -> int:
@@ -995,19 +995,18 @@ def main() -> int:
             big_dir = gen_override(spark, args.out, args.factor)
         else:
             base_dir, big_dir = SRC_DIR, scale_dir
-        # evaluate each corpus's predicate IMMEDIATELY after its run: the
-        # fixpoint graph predicates read module-global *_ROUND_PLANS,
-        # which the NEXT run overwrites — deferring both evaluations past
-        # the big-corpus run would silently certify the base row against
-        # the big corpus's round plans (r15 advice)
-        t_base, p_base = time_query(
+        # each corpus's predicate is evaluated right after its run, so the
+        # run's trace (DataFrames pinning its shuffle files) is dropped
+        # before the next run starts
+        t_base, p_base, trace = time_query(
             spark, name, base_dir, args.runs, warmup=not args.no_warmup
         )
-        ok_base = bool(plan_ok(p_base))
-        t_big, p_big = time_query(
+        ok_base = plan_ok(p_base) and (trace is None or round_plans_ok(trace))
+        t_big, p_big, trace = time_query(
             spark, name, big_dir, args.runs, warmup=not args.no_warmup
         )
-        ok_big = bool(plan_ok(p_big))
+        ok_big = plan_ok(p_big) and (trace is None or round_plans_ok(trace))
+        trace = None
         # graphscale rows carry a suffixed key so a full re-run can never
         # clobber a plain-corpus historical row with derived-corpus numbers
         # (graph_pagerank_topk has both kinds on record).  richvocab keeps
